@@ -114,8 +114,7 @@ object Anf {
           relTol: Double = 1e-3,
           quantile: Double = 0.9,
           checkpointDir: Option[String] = None,
-          resume: Boolean = false,
-          verbose: Boolean = false): Result = {
+          resume: Boolean = false): Result = {
     require(m >= 16 && (m & (m - 1)) == 0, s"m must be a power of two >= 16, got $m")
     val spark = edges.sparkSession
     import spark.implicits._
@@ -144,7 +143,7 @@ object Anf {
           require(java.nio.file.Files.exists(java.nio.file.Paths.get(p)),
             s"cannot resume ANF: superstep $h checkpoint missing at $p — " +
               "hop-indexed history is not reconstructable (was the dir " +
-              "cleaned, or checkpointEvery > 1?); rerun without resume")
+              "cleaned?); rerun without resume")
           history += graft.sources.TableIO.read(spark, p)
             .agg(sum(ballEst)).collect()(0).getDouble(0)
         }
@@ -152,7 +151,7 @@ object Anf {
     }
     val outcome = Superstep.run(init,
       Superstep.Config(maxSupersteps = maxH, checkpointDir = checkpointDir,
-        resume = resume, verbose = verbose)) { (state, _) =>
+        resume = resume)) { (state, _) =>
       val msgs = scatterMax(adj, state, m)
       val next = state.join(msgs.hint("shuffle_hash"), Seq(Graph.VID), "left")
         .select(col(Graph.VID), mergedRegs)
@@ -242,8 +241,7 @@ object Anf {
    */
   def harmonicApprox(edges: DataFrame,
                      m: Int = 64,
-                     maxH: Int = 30,
-                     verbose: Boolean = false): DataFrame = {
+                     maxH: Int = 30): DataFrame = {
     require(m >= 16 && (m & (m - 1)) == 0, s"m must be a power of two >= 16, got $m")
     val (e0, ownE) = Graph.ensureCut(edges) // one upstream pass, not three
     val adj = Adjacency.build(e0).persist(StorageLevel.MEMORY_AND_DISK)
@@ -258,7 +256,7 @@ object Anf {
 
     var lastTotal = Double.NaN
     val outcome = Superstep.run(init,
-      Superstep.Config(maxSupersteps = maxH, verbose = verbose)) { (state, h) =>
+      Superstep.Config(maxSupersteps = maxH)) { (state, h) =>
       val msgs = scatterMax(adj, state, m)
       val merged = state.join(msgs.hint("shuffle_hash"), Seq(Graph.VID), "left")
         .select(col(Graph.VID), mergedRegs, col("prev"), col("hc"))

@@ -75,8 +75,7 @@ object ConnectedComponents {
           maxSupersteps: Int = 200,
           denseThreshold: Double = 0.1,
           pointerJump: Boolean = false,
-          warmStart: Option[DataFrame] = None,
-          verbose: Boolean = false): Result = {
+          warmStart: Option[DataFrame] = None): Result = {
     // cut: the symmetrized edge set feeds the adjacency build AND the degree
     // pass — uncut, each re-ran the union+distinct AND the upstream edge
     // derivation (twice each, both directions): four corpus passes at scale
@@ -123,7 +122,7 @@ object ConnectedComponents {
     }
     val outcome = Superstep.run(init,
       Superstep.Config(maxSupersteps = maxSupersteps, checkpointDir = checkpointDir,
-        resume = resume, verbose = verbose)) { (state, _) =>
+        resume = resume)) { (state, _) =>
       val (frontEdges, deltaCount) = carried.getOrElse(frontierStats(state))
       val dense = deltaCount > denseThreshold * totalV
       val trv = if (dense) totalEdges else frontEdges

@@ -67,8 +67,7 @@ object Cores {
    * monotone; probe = one cached-scan per round, same as WCC.
    */
   def coreness(edges: DataFrame, maxRounds: Int = 100,
-               checkpointDir: Option[String] = None,
-               verbose: Boolean = false): CorenessResult = {
+               checkpointDir: Option[String] = None): CorenessResult = {
     import graft.core.{Adjacency, StepResult, Superstep}
     // cut: adjacency + degree passes share one materialized symmetrization
     val und = graft.core.Lineage.cut(Graph.undirected(edges))
@@ -80,8 +79,7 @@ object Cores {
     def changedCount(df: DataFrame): Long =
       df.filter(col("changed")).agg(count(lit(1))).collect()(0).getLong(0)
     val outcome = Superstep.run(init,
-      Superstep.Config(maxSupersteps = maxRounds, checkpointDir = checkpointDir,
-        verbose = verbose)) { (state, _) =>
+      Superstep.Config(maxSupersteps = maxRounds, checkpointDir = checkpointDir)) { (state, _) =>
       // every round rebroadcasts all values: a vertex's h can change when any
       // neighbor's value drops, so the full-edge scatter is the honest cost
       // (a changed-neighbor frontier needs per-vertex histograms kept hot)

@@ -49,8 +49,7 @@ object Dag {
    * the relaxation never converges, and the loop throws after
    * `maxSupersteps` instead of returning a wrong answer.
    */
-  def layers(dag: DataFrame, maxSupersteps: Int = 200,
-             verbose: Boolean = false): Result = {
+  def layers(dag: DataFrame, maxSupersteps: Int = 200): Result = {
     val adj = Adjacency.build(dag).persist(StorageLevel.MEMORY_AND_DISK)
     val degs = Graph.outDegrees(dag).persist(StorageLevel.MEMORY_AND_DISK)
     // state (vid, layer, changed, deg): deg rides along so the frontier
@@ -68,7 +67,7 @@ object Dag {
       (r.getLong(0), r.getLong(1))
     }
     val outcome = Superstep.run(init,
-      Superstep.Config(maxSupersteps = maxSupersteps, verbose = verbose)) { (state, _) =>
+      Superstep.Config(maxSupersteps = maxSupersteps)) { (state, _) =>
       val (frontEdges, _) = carried.getOrElse(frontierStats(state))
       val pushFrom = state.filter(col("changed"))
       val msgs = adj.join(pushFrom.hint("shuffle_hash"),

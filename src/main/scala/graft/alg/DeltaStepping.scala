@@ -46,8 +46,7 @@ object DeltaStepping {
 
   def run(edges: DataFrame, source: Long, delta: Double,
           checkpointDir: Option[String] = None,
-          maxSupersteps: Int = 10000,
-          verbose: Boolean = false): Result = {
+          maxSupersteps: Int = 10000): Result = {
     require(delta > 0.0, s"delta must be positive, got $delta")
     val spark = edges.sparkSession
     import spark.implicits._
@@ -58,8 +57,8 @@ object DeltaStepping {
 
     val init = Seq((source, 0.0, true)).toDF(Graph.VID, "dist", "pending")
     val outcome = Superstep.run(init,
-      Superstep.Config(maxSupersteps = maxSupersteps, checkpointDir = checkpointDir,
-        verbose = verbose)) { (state, _) =>
+      Superstep.Config(maxSupersteps = maxSupersteps,
+        checkpointDir = checkpointDir)) { (state, _) =>
       // bucket probe: O(1) rows off the materialized state (cut-before-probe)
       val minPending = state.filter(col("pending")).agg(min("dist")).collect()(0)
       val bucketHi =

@@ -35,8 +35,7 @@ object Eigen {
   def run(edges: DataFrame,
           rounds: Int = 5,
           checkpointDir: Option[String] = None,
-          resume: Boolean = false,
-          verbose: Boolean = false): Result = {
+          resume: Boolean = false): Result = {
     val (e0, ownE) = Graph.ensureCut(edges) // one upstream pass, not three
     val adj = Adjacency.build(e0).persist(StorageLevel.MEMORY_AND_DISK)
     adj.count() // partition build is init-time, not alg_exec
@@ -53,7 +52,7 @@ object Eigen {
     var pendingRelease: Option[DataFrame] = None
     val outcome = Superstep.run(init,
       Superstep.Config(maxSupersteps = rounds, checkpointDir = checkpointDir,
-        resume = resume, verbose = verbose)) { (state, superstep) =>
+        resume = resume)) { (state, superstep) =>
       pendingRelease.foreach(graft.core.Lineage.release); pendingRelease = None
       val msgs = adj.join(state.hint("shuffle_hash"), adj(Graph.SRC) === state(Graph.VID))
         .select(explode(col("nbrs")).as(Graph.VID), col("eigen"))

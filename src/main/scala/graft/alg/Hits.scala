@@ -33,8 +33,7 @@ object Hits {
   def run(edges: DataFrame,
           rounds: Int = 5,
           checkpointDir: Option[String] = None,
-          resume: Boolean = false,
-          verbose: Boolean = false): Result = {
+          resume: Boolean = false): Result = {
     val (e0, ownE) = Graph.ensureCut(edges) // one upstream pass, not four
     val adjF = Adjacency.build(e0).persist(StorageLevel.MEMORY_AND_DISK)
     val adjR = Adjacency.build(Graph.reverse(e0))
@@ -52,7 +51,7 @@ object Hits {
     var pendingRelease: Option[DataFrame] = None
     val outcome = Superstep.run(init,
       Superstep.Config(maxSupersteps = rounds, checkpointDir = checkpointDir,
-        resume = resume, verbose = verbose)) { (state, superstep) =>
+        resume = resume)) { (state, superstep) =>
       pendingRelease.foreach(graft.core.Lineage.release); pendingRelease = None
       // auth'(v) = Σ_{u→v} hub(u): state shuffles by vid (O(V)); the
       // pre-partitioned adjacency side stays put (shuffle_hash keeps the

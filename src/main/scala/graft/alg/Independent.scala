@@ -62,8 +62,7 @@ object Independent {
    */
   def mis(edges: DataFrame,
           maxSupersteps: Int = 100,
-          checkpointDir: Option[String] = None,
-          verbose: Boolean = false): MisResult = {
+          checkpointDir: Option[String] = None): MisResult = {
     // cut: adjacency + degree passes share one materialized symmetrization
     val und = graft.core.Lineage.cut(Graph.undirected(edges))
     val adj = Adjacency.build(und).persist(StorageLevel.MEMORY_AND_DISK)
@@ -73,8 +72,8 @@ object Independent {
 
     var carried: Option[(Long, Long)] = None
     val outcome = Superstep.run(init,
-      Superstep.Config(maxSupersteps = maxSupersteps, checkpointDir = checkpointDir,
-        verbose = verbose)) { (state, _) =>
+      Superstep.Config(maxSupersteps = maxSupersteps,
+        checkpointDir = checkpointDir)) { (state, _) =>
       val (frontEdges, _) = carried.getOrElse(activeStats(state))
       val next = misRound(adj, state)
       val cut = graft.core.Lineage.cut(next)
@@ -107,8 +106,7 @@ object Independent {
   def coloring(edges: DataFrame,
                maxColors: Int = 64,
                innerRounds: Int = 0,
-               maxSupersteps: Int = 400,
-               verbose: Boolean = false): ColoringResult = {
+               maxSupersteps: Int = 400): ColoringResult = {
     // cut: adjacency + degree passes share one materialized symmetrization
     val und = graft.core.Lineage.cut(Graph.undirected(edges))
     val adj = Adjacency.build(und).persist(StorageLevel.MEMORY_AND_DISK)
@@ -120,7 +118,7 @@ object Independent {
     var phaseRound = 0
     var carried: Option[(Long, Long)] = None
     val outcome = Superstep.run(init,
-      Superstep.Config(maxSupersteps = maxSupersteps, verbose = verbose)) { (state, _) =>
+      Superstep.Config(maxSupersteps = maxSupersteps)) { (state, _) =>
       val (frontEdges, _) = carried.getOrElse(activeStats(state))
       val stepped = misRound(adj, state)
       phaseRound += 1

@@ -37,8 +37,7 @@ object Katz {
           rounds: Int = 5,
           alpha: Double = 0.1,
           checkpointDir: Option[String] = None,
-          resume: Boolean = false,
-          verbose: Boolean = false): Result = {
+          resume: Boolean = false): Result = {
     val (e0, ownE) = Graph.ensureCut(edges) // one upstream pass, not three
     val adj = Adjacency.build(e0).persist(StorageLevel.MEMORY_AND_DISK)
     adj.count() // partition build is init-time, not alg_exec
@@ -49,7 +48,7 @@ object Katz {
     val init = verts.select(col(Graph.VID), lit(0.0).as("katz"))
     val outcome = Superstep.run(init,
       Superstep.Config(maxSupersteps = rounds, checkpointDir = checkpointDir,
-        resume = resume, verbose = verbose)) { (state, superstep) =>
+        resume = resume)) { (state, superstep) =>
       val msgs = adj.join(state.hint("shuffle_hash"), adj(Graph.SRC) === state(Graph.VID))
         .select(explode(col("nbrs")).as(Graph.VID), col("katz"))
         .groupBy(Graph.VID)

@@ -43,8 +43,7 @@ object LabelPropagation {
                 maxIterations: Int = MaxIterations,
                 stableIterations: Int = StableIterations,
                 pruneTopK: Int = 0,
-                checkpointDir: Option[String] = None,
-                verbose: Boolean = false): Result = {
+                checkpointDir: Option[String] = None): Result = {
     val spark = edges.sparkSession
     val e = edges.select(col(Graph.SRC), col(Graph.DST))
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -74,8 +73,8 @@ object LabelPropagation {
         col(Graph.VID).as("label"), lit(0).as("stable"))
 
     val outcome = Superstep.run(init,
-      Superstep.Config(maxSupersteps = maxIterations, checkpointDir = checkpointDir,
-        verbose = verbose)) { (state, iter) =>
+      Superstep.Config(maxSupersteps = maxIterations,
+        checkpointDir = checkpointDir)) { (state, iter) =>
       // P'[v][l] = Σ_{u∈N(v)} P[u][l] / deg(v): messages flow along edge
       // (v,u) from u to v ⇒ join dist(u) on e.dst = u, group by e.src = v.
       val exploded = state.select(col(Graph.VID), explode(col("dist")).as("kv"))
@@ -148,14 +147,13 @@ object LabelPropagation {
    * the production-scale companion to [[labelRank]].
    */
   def majorityLpa(edges: DataFrame, iterations: Int = 10,
-                  checkpointDir: Option[String] = None,
-                  verbose: Boolean = false): Result = {
+                  checkpointDir: Option[String] = None): Result = {
     val e = Graph.symmetrized(edges).persist(StorageLevel.MEMORY_AND_DISK)
     val eCount = e.count()
     val init = Graph.vertices(e).select(col(Graph.VID), col(Graph.VID).as("label"))
     val outcome = Superstep.run(init,
-      Superstep.Config(maxSupersteps = iterations, checkpointDir = checkpointDir,
-        verbose = verbose)) { (state, iter) =>
+      Superstep.Config(maxSupersteps = iterations,
+        checkpointDir = checkpointDir)) { (state, iter) =>
       val votes = e.join(state.hint("shuffle_hash"), e(Graph.DST) === state(Graph.VID))
         .groupBy(e(Graph.SRC).as("__v"), col("label"))
         .agg(count(lit(1)).as("n"))

@@ -53,8 +53,7 @@ object Matching {
    * mate = -1 for unmatched vertices.
    */
   def run(edges: DataFrame,
-          maxSupersteps: Int = 100,
-          verbose: Boolean = false): Result = {
+          maxSupersteps: Int = 100): Result = {
     val ce = edges.filter(col(Graph.SRC) =!= col(Graph.DST))
       .select(least(col(Graph.SRC), col(Graph.DST)).as("a"),
         greatest(col(Graph.SRC), col(Graph.DST)).as("b"))
@@ -71,7 +70,7 @@ object Matching {
 
     var carriedLive: Option[Long] = None
     val outcome = Superstep.run(init,
-      Superstep.Config(maxSupersteps = maxSupersteps, verbose = verbose)) { (state, _) =>
+      Superstep.Config(maxSupersteps = maxSupersteps)) { (state, _) =>
       val live = state.filter(col("__st") === 0)
       val liveBefore = carriedLive.getOrElse(live.count())
       // per-vertex argmin live incident edge: (vid, its min pk, partner)

@@ -52,8 +52,7 @@ object Msf {
    * (a, b, w) with a < b.
    */
   def run(edges: DataFrame,
-          maxSupersteps: Int = 64,
-          verbose: Boolean = false): Result = {
+          maxSupersteps: Int = 64): Result = {
     val ce = edges.filter(col(Graph.SRC) =!= col(Graph.DST))
       .select(least(col(Graph.SRC), col(Graph.DST)).as("a"),
         greatest(col(Graph.SRC), col(Graph.DST)).as("b"), col("weight").as("w"))
@@ -79,7 +78,7 @@ object Msf {
 
     var carriedLive: Option[Long] = None
     val outcome = Superstep.run(init,
-      Superstep.Config(maxSupersteps = maxSupersteps, verbose = verbose)) { (live, _) =>
+      Superstep.Config(maxSupersteps = maxSupersteps)) { (live, _) =>
       val liveCount = carriedLive.getOrElse(live.count())
       if (liveCount == 0L) {
         StepResult(live, 0L, converged = true)

@@ -75,10 +75,9 @@ object PageRank {
           damping: Double = 0.85,
           checkpointDir: Option[String] = None,
           resume: Boolean = false,
-          chunkSize: Int = Adjacency.DefaultChunk,
-          verbose: Boolean = false): Result = {
+          chunkSize: Int = Adjacency.DefaultChunk): Result = {
     val ctx = buildCtx(edges, chunkSize)
-    try runWithCtx(ctx, rounds, damping, checkpointDir, resume, verbose)
+    try runWithCtx(ctx, rounds, damping, checkpointDir, resume)
     finally ctx.release()
   }
 
@@ -86,8 +85,7 @@ object PageRank {
                                 rounds: Int = 5,
                                 damping: Double = 0.85,
                                 checkpointDir: Option[String] = None,
-                                resume: Boolean = false,
-                                verbose: Boolean = false): Result = {
+                                resume: Boolean = false): Result = {
     import ctx.{adj, verts, degs, v, e}
     val base = (1.0 - damping) / v
 
@@ -95,7 +93,7 @@ object PageRank {
 
     val outcome = Superstep.run(init,
       Superstep.Config(maxSupersteps = rounds, checkpointDir = checkpointDir,
-        resume = resume, verbose = verbose)) { (state, superstep) =>
+        resume = resume)) { (state, superstep) =>
       // shuffle-hash hint: the state side (O(V)) is hash-built per partition
       // against the pre-partitioned adjacency — no driver-side broadcast
       // build (unscalable at 10^12 vertices) and no per-superstep sort
@@ -139,8 +137,7 @@ object PageRank {
    */
   def runWeighted(wedges: DataFrame,
                   rounds: Int = 5,
-                  damping: Double = 0.85,
-                  verbose: Boolean = false): Result = {
+                  damping: Double = 0.85): Result = {
     val w = wedges
       .select(col(Graph.SRC), col(Graph.DST), col("weight").cast("double").as("w"))
       .repartition(col(Graph.SRC))
@@ -158,7 +155,7 @@ object PageRank {
 
     val init = verts.select(col(Graph.VID), lit(1.0 / v).as("stored"))
     val outcome = Superstep.run(init,
-      Superstep.Config(maxSupersteps = rounds, verbose = verbose)) { (state, superstep) =>
+      Superstep.Config(maxSupersteps = rounds)) { (state, superstep) =>
       val msgs = w.join(state.hint("shuffle_hash"), w(Graph.SRC) === state(Graph.VID))
         .select(col(Graph.DST).as(Graph.VID), (col("stored") * col("w")).as("c"))
         .groupBy(Graph.VID)
@@ -200,10 +197,9 @@ object PageRank {
                    rounds: Int = 5,
                    damping: Double = 0.85,
                    checkpointDir: Option[String] = None,
-                   resume: Boolean = false,
-                   verbose: Boolean = false): Result = {
+                   resume: Boolean = false): Result = {
     val ctx = buildCtx(edges)
-    try personalizedWithCtx(ctx, seeds, rounds, damping, checkpointDir, resume, verbose)
+    try personalizedWithCtx(ctx, seeds, rounds, damping, checkpointDir, resume)
     finally ctx.release()
   }
 
@@ -212,8 +208,7 @@ object PageRank {
                                          rounds: Int = 5,
                                          damping: Double = 0.85,
                                          checkpointDir: Option[String] = None,
-                                         resume: Boolean = false,
-                                         verbose: Boolean = false): Result = {
+                                         resume: Boolean = false): Result = {
     require(seeds.nonEmpty, "personalized PageRank needs a non-empty seed set")
     import ctx.{adj, e}
     val seedMass = 1.0 / seeds.size
@@ -234,7 +229,7 @@ object PageRank {
 
     val outcome = Superstep.run(init,
       Superstep.Config(maxSupersteps = rounds, checkpointDir = checkpointDir,
-        resume = resume, verbose = verbose)) { (state, superstep) =>
+        resume = resume)) { (state, superstep) =>
       val msgs = adj.join(state.hint("shuffle_hash"), adj(Graph.SRC) === state(Graph.VID))
         .select(explode(col("nbrs")).as(Graph.VID), col("stored"))
         .groupBy(Graph.VID).agg(sum("stored").as("mbox"))
@@ -316,60 +311,52 @@ object PageRank {
                         damping: Double = 0.85,
                         maxIter: Int = 100,
                         checkpointDir: Option[String] = None,
-                        verbose: Boolean = false,
                         warmStart: Option[DataFrame] = None): Result = {
-    val spark = edges.sparkSession
-    val (e0, ownE) = Graph.ensureCut(edges) // one upstream pass, not four
-    val adj = Adjacency.build(e0).persist(StorageLevel.MEMORY_AND_DISK)
-    adj.count()
-    val verts = Graph.vertices(e0).persist(StorageLevel.MEMORY_AND_DISK)
-    val v = verts.count(); val e = e0.count()
-    val base = (1.0 - damping) / v
-    val degs = verts.join(Graph.outDegrees(e0), Seq(Graph.VID), "left")
-      .select(col(Graph.VID), coalesce(col("deg"), lit(0L)).as("deg"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val ctx = buildCtx(edges)
+    try {
+      import ctx.{adj, verts, degs, v, e}
+      val base = (1.0 - damping) / v
 
-    // state carries both the stored (pre-divided) rank and the display value
-    val init = warmStart match {
-      case None =>
-        verts.select(col(Graph.VID), lit(1.0 / v).as("stored"), lit(1.0 / v).as("value"))
-      case Some(prev) =>
-        // initialize as if the previous run's last superstep produced this
-        // state (stored pre-divided by out-degree), so an unchanged graph
-        // passes the L∞ probe immediately
-        degs.join(prev.select(col(Graph.VID), col("rank").as("value")),
-            Seq(Graph.VID), "left")
+      // state carries both the stored (pre-divided) rank and the display value
+      val init = warmStart match {
+        case None =>
+          verts.select(col(Graph.VID), lit(1.0 / v).as("stored"), lit(1.0 / v).as("value"))
+        case Some(prev) =>
+          // initialize as if the previous run's last superstep produced this
+          // state (stored pre-divided by out-degree), so an unchanged graph
+          // passes the L∞ probe immediately
+          degs.join(prev.select(col(Graph.VID), col("rank").as("value")),
+              Seq(Graph.VID), "left")
+            .select(col(Graph.VID), col("deg"),
+              coalesce(col("value"), lit(1.0 / v)).as("value"))
+            .select(col(Graph.VID),
+              when(col("deg") > 0, col("value") / col("deg"))
+                .otherwise(col("value")).as("stored"),
+              col("value"))
+      }
+      val outcome = Superstep.run(init,
+        Superstep.Config(maxSupersteps = maxIter,
+          checkpointDir = checkpointDir)) { (state, _) =>
+        val msgs = adj.join(state.hint("shuffle_hash"), adj(Graph.SRC) === state(Graph.VID))
+          .select(explode(col("nbrs")).as(Graph.VID), col("stored"))
+          .groupBy(Graph.VID).agg(sum("stored").as("mbox"))
+        val next = degs
+          .join(msgs.hint("shuffle_hash"), Seq(Graph.VID), "left")
           .select(col(Graph.VID), col("deg"),
-            coalesce(col("value"), lit(1.0 / v)).as("value"))
+            (lit(base) + lit(damping) * coalesce(col("mbox"), lit(0.0))).as("value"))
           .select(col(Graph.VID),
             when(col("deg") > 0, col("value") / col("deg"))
               .otherwise(col("value")).as("stored"),
             col("value"))
-    }
-    val outcome = Superstep.run(init,
-      Superstep.Config(maxSupersteps = maxIter, checkpointDir = checkpointDir,
-        verbose = verbose)) { (state, _) =>
-      val msgs = adj.join(state.hint("shuffle_hash"), adj(Graph.SRC) === state(Graph.VID))
-        .select(explode(col("nbrs")).as(Graph.VID), col("stored"))
-        .groupBy(Graph.VID).agg(sum("stored").as("mbox"))
-      val next = degs
-        .join(msgs.hint("shuffle_hash"), Seq(Graph.VID), "left")
-        .select(col(Graph.VID), col("deg"),
-          (lit(base) + lit(damping) * coalesce(col("mbox"), lit(0.0))).as("value"))
-        .select(col(Graph.VID),
-          when(col("deg") > 0, col("value") / col("deg")).otherwise(col("value")).as("stored"),
-          col("value"))
-      // materialize once; the L∞ probe joins two CACHED O(V) frames instead
-      // of re-executing the O(E) message plan
-      val cut = graft.core.Lineage.cut(next)
-      val delta = cut.select(col(Graph.VID), col("value"))
-        .join(state.select(col(Graph.VID), col("value").as("old")), Seq(Graph.VID))
-        .agg(max(abs(col("value") - col("old")))).collect()(0).getDouble(0)
-      StepResult(cut, edgesTraversed = e, converged = delta < tol)
-    }
-    adj.unpersist(blocking = false); degs.unpersist(blocking = false)
-    verts.unpersist(blocking = false)
-    if (ownE) graft.core.Lineage.release(e0)
-    Result(outcome.state.select(col(Graph.VID), col("value").as("rank")), outcome.metrics)
+        // materialize once; the L∞ probe joins two CACHED O(V) frames instead
+        // of re-executing the O(E) message plan
+        val cut = graft.core.Lineage.cut(next)
+        val delta = cut.select(col(Graph.VID), col("value"))
+          .join(state.select(col(Graph.VID), col("value").as("old")), Seq(Graph.VID))
+          .agg(max(abs(col("value") - col("old")))).collect()(0).getDouble(0)
+        StepResult(cut, edgesTraversed = e, converged = delta < tol)
+      }
+      Result(outcome.state.select(col(Graph.VID), col("value").as("rank")), outcome.metrics)
+    } finally ctx.release()
   }
 }

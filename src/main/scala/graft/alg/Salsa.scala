@@ -38,8 +38,7 @@ object Salsa {
   def run(edges: DataFrame,
           rounds: Int = 5,
           checkpointDir: Option[String] = None,
-          resume: Boolean = false,
-          verbose: Boolean = false): Result = {
+          resume: Boolean = false): Result = {
     val (e0, ownE) = Graph.ensureCut(edges) // one upstream pass, not four
     val adjF = Adjacency.build(e0).persist(StorageLevel.MEMORY_AND_DISK)
     val adjR = Adjacency.build(Graph.reverse(e0))
@@ -56,7 +55,7 @@ object Salsa {
     var pendingRelease: Option[DataFrame] = None
     val outcome = Superstep.run(init,
       Superstep.Config(maxSupersteps = rounds, checkpointDir = checkpointDir,
-        resume = resume, verbose = verbose)) { (state, superstep) =>
+        resume = resume)) { (state, superstep) =>
       pendingRelease.foreach(graft.core.Lineage.release); pendingRelease = None
       // a_raw(v) = Σ_{u→v} hub(u)/outdeg(u): adjF.deg is outdeg(u)
       val authMsgs = adjF.join(state.hint("shuffle_hash"),

@@ -39,7 +39,7 @@ import scala.collection.mutable.ArrayBuffer
  */
 object StronglyConnected {
 
-  def run(edges: DataFrame, maxRounds: Int = 100, verbose: Boolean = false): DataFrame = {
+  def run(edges: DataFrame, maxRounds: Int = 100): DataFrame = {
     var rem = Lineage.cut(
       edges.select(col(Graph.SRC), col(Graph.DST))
         .filter(col(Graph.SRC) =!= col(Graph.DST)).distinct())
@@ -77,7 +77,6 @@ object StronglyConnected {
             .join(v2.select(col(Graph.VID).as(Graph.DST)), Seq(Graph.DST), "left_semi")
           swapRem(e2, v2)
           nRem -= nTrivial
-          if (verbose) println(s"[scc round $rounds] trimmed $nTrivial (rem $nRem)")
         }
       }
       if (nRem == 0) { /* all trivial */ }
@@ -134,7 +133,6 @@ object StronglyConnected {
         val nDone = labeled.count()
         if (frontier ne reached) Lineage.release(frontier)
         Lineage.release(reached)
-        if (verbose) println(s"[scc round $rounds] swept $nDone in SCCs (rem ${nRem - nDone})")
 
         val v2 = remV.join(labeled, Seq(Graph.VID), "left_anti")
         val e2 = rem

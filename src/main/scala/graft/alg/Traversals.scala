@@ -36,8 +36,7 @@ object Traversals {
   def bfs(edges: DataFrame, source: Long,
           checkpointDir: Option[String] = None,
           denseThreshold: Double = 0.1,
-          denseMinV: Long = 1L << 20,
-          verbose: Boolean = false): Result = {
+          denseMinV: Long = 1L << 20): Result = {
     val spark = edges.sparkSession
     import spark.implicits._
     // one upstream pass (adjacency + degrees + the lazily-built dense-mode
@@ -54,8 +53,7 @@ object Traversals {
     // state: (vid, cost, frontier)
     val init = Seq((source, 0, true)).toDF(Graph.VID, "cost", "frontier")
     val outcome = Superstep.run(init,
-      Superstep.Config(maxSupersteps = 10000, checkpointDir = checkpointDir,
-        verbose = verbose)) { (state, level) =>
+      Superstep.Config(maxSupersteps = 10000, checkpointDir = checkpointDir)) { (state, level) =>
       val frontier = state.filter(col("frontier"))
       // frontier size + edges-to-scan in one tiny job; frontier == 0 IS the
       // convergence check (replaces a per-superstep isEmpty probe of the cut
@@ -129,16 +127,15 @@ object Traversals {
    */
   def sssp(edges: DataFrame, source: Long,
            checkpointDir: Option[String] = None,
-           maxSupersteps: Int = 10000,
-           verbose: Boolean = false): Result = {
+           maxSupersteps: Int = 10000): Result = {
     val spark = edges.sparkSession
     import spark.implicits._
     val e = edges.select(col(Graph.SRC), col(Graph.DST), col("weight").cast("double"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val init = Seq((source, 0.0, true)).toDF(Graph.VID, "dist", "changed")
     val outcome = Superstep.run(init,
-      Superstep.Config(maxSupersteps = maxSupersteps, checkpointDir = checkpointDir,
-        verbose = verbose)) { (state, _) =>
+      Superstep.Config(maxSupersteps = maxSupersteps,
+        checkpointDir = checkpointDir)) { (state, _) =>
       val delta = state.filter(col("changed"))
       val relax = e.join(delta.hint("shuffle_hash"), e(Graph.SRC) === delta(Graph.VID))
         .select(col(Graph.DST).as(Graph.VID), (col("dist") + col("weight")).as("nd"))

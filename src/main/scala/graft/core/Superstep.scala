@@ -1,10 +1,12 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import java.nio.file.{Files, Paths, Path}
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.collection.mutable.ArrayBuffer
+import scala.util.Try
 
 /** One superstep's ledger row — the analog of Totem's per-phase timers
  * (`/root/reference/src/totem/totem.h:22-37`, `totem_engine.cu:166-186`)
@@ -31,23 +33,20 @@ final case class StepResult(state: DataFrame, edgesTraversed: Long, converged: B
  * `grooves_synchronize` and is MANDATORY for plan-growth control: a
  * 25-iteration loop of joins would otherwise blow up the optimizer.
  *
- * With a `checkpointDir`, every superstep writes its state table plus a
- * `manifest.json` carrying lineage (parent superstep, input fingerprint) and
- * metrics (wall ms, per-partition row counts, edges traversed, GTEPS), and a
- * crashed run resumes from the last complete superstep.
+ * As in Totem, the loop owns its policy: an algorithm supplies only the step.
+ * With a `checkpointDir`, every superstep writes its state table to
+ * `superstep=N/data` plus a `superstep=N/manifest.json` with the fields
+ * `superstep`, `status` ("complete"), `wall_ms`, `state_rows`,
+ * `edges_traversed`, `gteps`, `converged`, `lineage` (`parent`: superstep
+ * N-1's data path or null, `data`) and `partitions` (`partition`, `rows` per
+ * Spark partition). A crashed run resumes from the last complete superstep.
  */
 object Superstep {
 
   final case class Config(
       maxSupersteps: Int = 100,
       checkpointDir: Option[String] = None,
-      /** checkpoint to parquet every k supersteps (1 = each); in between,
-       * persist + localCheckpoint keeps lineage short without disk I/O. */
-      checkpointEvery: Int = 1,
-      resume: Boolean = false,
-      /** record per-partition row counts in the manifest (extra tiny job). */
-      partitionLineage: Boolean = true,
-      verbose: Boolean = false)
+      resume: Boolean = false)
 
   final case class Outcome(state: DataFrame, metrics: Seq[StepMetrics]) {
     def supersteps: Int = metrics.size
@@ -78,30 +77,25 @@ object Superstep {
     while (!done && superstep <= cfg.maxSupersteps) {
       val t0 = System.nanoTime()
       val res = step(state, superstep)
-      val doParquet = cfg.checkpointDir.isDefined && (superstep % cfg.checkpointEvery == 0)
-      val (newState, rows, perPart) =
-        if (doParquet) {
-          val out = writeCheckpoint(res.state, cfg, superstep)
+      val (newState, perPart) = cfg.checkpointDir match {
+        case Some(dir) =>
+          val (reread, pp) = writeCheckpoint(res.state, dir, superstep)
           // a step that cut its own state leaves checkpoint blocks behind;
           // the parquet copy supersedes them
           if (res.state ne state) Lineage.release(res.state)
-          out
-        } else {
+          (reread, Some(pp))
+        case None =>
           // steps that probe convergence materialize (Lineage.cut) their own
-          // state first — don't execute the step plan a second time here
-          val s = if (Lineage.isCut(res.state)) res.state else materialize(res.state)
-          // the row count is ledger-only; skip the extra per-superstep job
-          // unless someone reads it (manifest path counts via partitions)
-          val rows = if (cfg.verbose) s.count() else -1L
-          (s, rows, Map.empty[Int, Long])
-        }
+          // state first — don't execute the step plan a second time here.
+          // The row count is ledger-only: in memory it would cost an extra
+          // job per superstep, so only checkpointed runs record it.
+          (if (Lineage.isCut(res.state)) res.state else materialize(res.state), None)
+      }
       val wallMs = (System.nanoTime() - t0) / 1000000
+      val rows = perPart.fold(-1L)(_.values.sum)
       val m = StepMetrics(superstep, wallMs, rows, res.edgesTraversed, res.converged)
       metrics += m
-      if (doParquet) writeManifest(cfg.checkpointDir.get, m, perPart, cfg)
-      if (cfg.verbose)
-        println(f"[superstep $superstep%3d] rows=$rows%,d trvEdges=${res.edgesTraversed}%,d " +
-          f"wall=${wallMs}ms gteps=${m.gteps}%.4f converged=${res.converged}")
+      for (dir <- cfg.checkpointDir; pp <- perPart) writeManifest(dir, m, pp)
       // free the previous superstep's cache (unpersist covers cache-manager
       // entries from parquet re-reads; release covers localCheckpoint blocks)
       if (state ne newState) {
@@ -119,40 +113,56 @@ object Superstep {
    * caches at MEMORY_AND_DISK itself; an extra persist would double-cache). */
   private def materialize(df: DataFrame): DataFrame = Lineage.cut(df)
 
-  private def writeCheckpoint(df: DataFrame, cfg: Config, superstep: Int): (DataFrame, Long, Map[Int, Long]) = {
-    val dir = cfg.checkpointDir.get
-    val path = s"$dir/superstep=$superstep/data"
+  private def dataPath(dir: String, superstep: Int): String = s"$dir/superstep=$superstep/data"
+
+  private def manifestPath(dir: String, superstep: Int): Path =
+    Paths.get(s"$dir/superstep=$superstep/manifest.json")
+
+  /** Write the state table, re-read it cached, and count its rows per
+   * partition (the manifest's partition lineage). */
+  private def writeCheckpoint(df: DataFrame, dir: String,
+                              superstep: Int): (DataFrame, Map[Int, Long]) = {
+    val path = dataPath(dir, superstep)
     graft.sources.TableIO.write(df, path)
-    val spark = df.sparkSession
-    val re = graft.sources.TableIO.read(spark, path).persist(StorageLevel.MEMORY_AND_DISK)
-    val perPart: Map[Int, Long] =
-      if (cfg.partitionLineage)
-        re.groupBy(spark_partition_id().as("pid")).count()
-          .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      else Map.empty
-    val rows = if (cfg.partitionLineage) perPart.values.sum else re.count()
-    (re, rows, perPart)
+    val re = graft.sources.TableIO.read(df.sparkSession, path).persist(StorageLevel.MEMORY_AND_DISK)
+    val perPart = re.groupBy(spark_partition_id().as("pid")).count()
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    (re, perPart)
   }
 
-  private def writeManifest(dir: String, m: StepMetrics, perPart: Map[Int, Long], cfg: Config): Unit = {
-    val pp = perPart.toSeq.sortBy(_._1)
-      .map { case (p, n) => s"""{"partition":$p,"rows":$n}""" }.mkString("[", ",", "]")
-    // the parent is the previous CHECKPOINTED superstep: with
-    // checkpointEvery > 1 the intermediate steps were only localCheckpoint'ed
-    // and have no data dir — recording N-1 would point lineage at a path
-    // that never existed
-    val parentStep = m.superstep - cfg.checkpointEvery
-    val parent = if (parentStep < 1) "null" else s""""$dir/superstep=$parentStep/data""""
-    val json =
-      s"""{"superstep":${m.superstep},"status":"complete","wall_ms":${m.wallMs},
-         |"state_rows":${m.stateRows},"edges_traversed":${m.edgesTraversed},
-         |"gteps":${m.gteps},"converged":${m.converged},
-         |"lineage":{"parent":$parent,"data":"$dir/superstep=${m.superstep}/data"},
-         |"partitions":$pp}""".stripMargin.replace("\n", "")
-    val p = Paths.get(s"$dir/superstep=${m.superstep}/manifest.json")
-    Files.createDirectories(p.getParent)
-    Files.writeString(p, json)
+  /** The manifest codec: every `manifest.json` is written and read here. */
+  private val json = new ObjectMapper()
+
+  /** Write the manifest to a temp file and rename it into place, so a crash
+   * mid-write never leaves a partial manifest behind as a resume point. */
+  private def writeManifest(dir: String, m: StepMetrics, perPart: Map[Int, Long]): Unit = {
+    val root = json.createObjectNode()
+      .put("superstep", m.superstep)
+      .put("status", "complete")
+      .put("wall_ms", m.wallMs)
+      .put("state_rows", m.stateRows)
+      .put("edges_traversed", m.edgesTraversed)
+      .put("gteps", m.gteps)
+      .put("converged", m.converged)
+    val lineage = root.putObject("lineage")
+    if (m.superstep > 1) lineage.put("parent", dataPath(dir, m.superstep - 1))
+    else lineage.putNull("parent")
+    lineage.put("data", dataPath(dir, m.superstep))
+    val parts = root.putArray("partitions")
+    perPart.toSeq.sortBy(_._1).foreach { case (p, n) =>
+      parts.addObject().put("partition", p).put("rows", n)
+    }
+    val target = manifestPath(dir, m.superstep)
+    Files.createDirectories(target.getParent)
+    val tmp = target.resolveSibling("manifest.json.tmp")
+    json.writeValue(tmp.toFile, root)
+    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
+
+  /** Superstep `superstep`'s manifest, if it parses and says complete. */
+  private def readManifest(dir: String, superstep: Int): Option[JsonNode] =
+    Try(json.readTree(manifestPath(dir, superstep).toFile)).toOption
+      .filter(n => n != null && n.path("status").asText() == "complete")
 
   /** Latest superstep whose manifest says complete (crash-safe resume point). */
   def latestComplete(dir: String): Option[(Int, String)] = {
@@ -168,9 +178,7 @@ object Superstep {
           .filter(p => p.getFileName.toString.startsWith("superstep="))
           .flatMap { p =>
             val ss = p.getFileName.toString.stripPrefix("superstep=").toIntOption
-            val mf = p.resolve("manifest.json")
-            ss.filter(_ => Files.exists(mf) &&
-              Files.readString(mf).contains(""""status":"complete""""))
+            ss.filter(readManifest(dir, _).isDefined)
               .map(s => (s, p.resolve("data").toString))
           }.toSeq
       } finally listing.close()
@@ -179,15 +187,9 @@ object Superstep {
 
   private def readLedger(dir: String, upTo: Int): Seq[StepMetrics] =
     (1 to upTo).flatMap { ss =>
-      val mf = Paths.get(s"$dir/superstep=$ss/manifest.json")
-      if (!Files.exists(mf)) None
-      else {
-        val s = Files.readString(mf)
-        def num(k: String): Option[Long] =
-          ("\"" + k + "\":(-?[0-9]+)").r.findFirstMatchIn(s).map(_.group(1).toLong)
-        for {
-          wall <- num("wall_ms"); rows <- num("state_rows"); trv <- num("edges_traversed")
-        } yield StepMetrics(ss, wall, rows, trv, s.contains("\"converged\":true"))
+      readManifest(dir, ss).map { n =>
+        StepMetrics(ss, n.path("wall_ms").asLong(), n.path("state_rows").asLong(),
+          n.path("edges_traversed").asLong(), n.path("converged").asBoolean())
       }
     }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import graft.core.{Superstep, StepResult}
@@ -15,6 +16,21 @@ class SuperstepSpec extends SparkSpec {
     d.toString
   }
 
+  private val json = new ObjectMapper()
+
+  private def manifest(dir: String, ss: Int): JsonNode =
+    json.readTree(Paths.get(s"$dir/superstep=$ss/manifest.json").toFile)
+
+  /** Five vertices whose `x` counts the supersteps run, checkpointed to
+   * `dir`; superstep `ss` reports `edges(ss)` traversed edges. */
+  private def countUp(dir: String, maxSupersteps: Int, resume: Boolean = false,
+                      edges: Int => Long = _ => 5L, convergeAt: Int = -1): Superstep.Outcome =
+    Superstep.run(spark.range(5).select(col("id").as("vid"), lit(0).as("x")),
+      Superstep.Config(maxSupersteps = maxSupersteps, checkpointDir = Some(dir),
+        resume = resume)) { (state, ss) =>
+      StepResult(state.withColumn("x", col("x") + 1), edges(ss), converged = ss == convergeAt)
+    }
+
   test("checkpoints write manifests with lineage and metrics") {
     val dir = tmpDir("ckpt")
     val init = spark.range(10).select(col("id").as("vid"), lit(0).as("x"))
@@ -24,13 +40,21 @@ class SuperstepSpec extends SparkSpec {
     }
     assert(out.supersteps == 3)
     (1 to 3).foreach { ss =>
-      val mf = Paths.get(s"$dir/superstep=$ss/manifest.json")
-      assert(Files.exists(mf))
-      val s = Files.readString(mf)
-      assert(s.contains("\"status\":\"complete\""))
-      assert(s.contains("\"edges_traversed\":10"))
-      assert(s.contains("\"partitions\":["))
-      if (ss > 1) assert(s.contains(s"superstep=${ss - 1}/data"))
+      assert(Files.exists(Paths.get(s"$dir/superstep=$ss/manifest.json")))
+      assert(!Files.exists(Paths.get(s"$dir/superstep=$ss/manifest.json.tmp")))
+      val m = manifest(dir, ss)
+      assert(m.path("superstep").asInt() == ss)
+      assert(m.path("status").asText() == "complete")
+      assert(m.path("edges_traversed").asLong() == 10L)
+      val parts = m.path("partitions")
+      assert(parts.isArray && parts.size() > 0)
+      var rows = 0L
+      parts.forEach(p => rows += p.path("rows").asLong())
+      assert(rows == 10L && m.path("state_rows").asLong() == 10L)
+      assert(m.path("lineage").path("data").asText() == s"$dir/superstep=$ss/data")
+      val parent = m.path("lineage").path("parent")
+      if (ss > 1) assert(parent.asText() == s"$dir/superstep=${ss - 1}/data")
+      else assert(parent.isNull)
     }
     assert(out.state.agg(min("x")).collect()(0).getInt(0) == 3)
   }
@@ -80,6 +104,61 @@ class SuperstepSpec extends SparkSpec {
     assert(out.state.agg(min("x")).collect()(0).getInt(0) == 5)
     // ledger includes the pre-crash supersteps read back from manifests
     assert(out.metrics.map(_.superstep) == Seq(1, 2, 3, 4, 5))
+  }
+
+  test("manifests stay valid JSON when the checkpoint dir contains a quote") {
+    val dir = tmpDir("ckpt\"quote")
+    assert(dir.contains("\""))
+    countUp(dir, maxSupersteps = 2)
+    (1 to 2).foreach { ss =>
+      val m = manifest(dir, ss)
+      assert(m.path("status").asText() == "complete")
+      assert(m.path("lineage").path("data").asText() == s"$dir/superstep=$ss/data")
+    }
+    assert(manifest(dir, 2).path("lineage").path("parent").asText() == s"$dir/superstep=1/data")
+    assert(Superstep.latestComplete(dir).map(_._1).contains(2))
+    val out = countUp(dir, maxSupersteps = 3, resume = true)
+    assert(out.metrics.map(_.superstep) == Seq(1, 2, 3))
+    assert(out.state.agg(min("x")).collect()(0).getInt(0) == 3)
+  }
+
+  test("the ledger read back on resume equals the first run's metrics") {
+    val dir = tmpDir("ledger")
+    val first = countUp(dir, maxSupersteps = 3, edges = ss => 7L * ss, convergeAt = 3)
+    val resumed = countUp(dir, maxSupersteps = 5, resume = true, edges = ss => 7L * ss)
+    assert(resumed.metrics.map(_.superstep) == Seq(1, 2, 3, 4, 5))
+    def key(m: graft.core.StepMetrics) = (m.superstep, m.wallMs, m.edgesTraversed, m.converged)
+    assert(resumed.metrics.take(3).map(key) == first.metrics.map(key))
+    assert(first.metrics.map(_.converged) == Seq(false, false, true))
+    assert(resumed.metrics.drop(3).map(_.edgesTraversed) == Seq(28L, 35L))
+  }
+
+  test("a truncated or unparseable manifest is not a resume point") {
+    val dir = tmpDir("truncated")
+    countUp(dir, maxSupersteps = 4)
+    // cut superstep 4's manifest just past its status field, as a crash
+    // mid-write would have left it
+    val mf4 = Paths.get(s"$dir/superstep=4/manifest.json")
+    val text = Files.readString(mf4)
+    val cut = text.indexOf("\"complete\"") + "\"complete\"".length + 1
+    Files.writeString(mf4, text.substring(0, cut))
+    assert(Superstep.latestComplete(dir).map(_._1).contains(3))
+    Files.writeString(Paths.get(s"$dir/superstep=3/manifest.json"), "not json")
+    assert(Superstep.latestComplete(dir).map(_._1).contains(2))
+    Files.writeString(Paths.get(s"$dir/superstep=2/manifest.json"),
+      """{"superstep":2,"status":"running"}""")
+    assert(Superstep.latestComplete(dir).map(_._1).contains(1))
+    // resume replays supersteps 2-4 on top of superstep 1's state
+    var executed = Seq.empty[Int]
+    val out = Superstep.run(spark.range(5).select(col("id").as("vid"), lit(0).as("x")),
+      Superstep.Config(maxSupersteps = 4, checkpointDir = Some(dir), resume = true)) { (state, ss) =>
+      executed :+= ss
+      StepResult(state.withColumn("x", col("x") + 1), 5L, converged = false)
+    }
+    assert(executed == Seq(2, 3, 4))
+    assert(out.metrics.map(_.superstep) == Seq(1, 2, 3, 4))
+    assert(out.state.agg(min("x")).collect()(0).getInt(0) == 4)
+    assert(Superstep.latestComplete(dir).map(_._1).contains(4))
   }
 
   test("WCC with checkpointing resumes mid-iteration to the same answer") {
