@@ -353,10 +353,9 @@ object Bench {
     s
   }
 
-  /** Shared session for the builder-side probe tools (QueryTime,
-   * TextScalingProbe): exactly the headline-bench session config, so the
-   * probes measure under the SAME knobs as the bench they reproduce
-   * (three hand-copied config blocks previously risked drifting). */
+  /** Session for the TextScalingProbe tool: exactly the headline-bench
+   * session config, so the probe measures under the SAME knobs as the bench
+   * it reproduces. */
   def probeSession(cores: Int = 32): SparkSession = session(cores)
 
   /** One full 5-round PageRank over a pre-generated edge parquet; returns

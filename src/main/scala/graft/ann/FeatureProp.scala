@@ -84,9 +84,9 @@ object FeatureProp {
   /** ONE smoothing round over the featured edge set `e` and exploded state
    * (vid, pos, uv): messages = edge⋈state shuffle-hash join, reduce =
    * map-side-combined per-(vid, pos) sum + contributor count, blend =
-   * (vid, pos)-keyed left join. Shared by the loop and the Explain plan
-   * capture so the documented plan cannot drift from the executed one. */
-  private[graft] def round(e: DataFrame, state: DataFrame, alpha: Double): DataFrame = {
+   * (vid, pos)-keyed left join. One round is one plan: the loop cuts
+   * lineage after each, so the plan never grows with the round count. */
+  private def round(e: DataFrame, state: DataFrame, alpha: Double): DataFrame = {
     val msgs = e.join(state.hint("shuffle_hash"), e(Graph.SRC) === state("vid"))
       .select(e(Graph.DST).as("vid"), col("pos"), col("uv"))
       .groupBy("vid", "pos")

@@ -22,9 +22,9 @@ import org.apache.spark.sql.types._
  * semantics (register values are ρ ≤ 33, far inside a byte). The buffer is
  * a plain `Array[Byte](m)` whose zero state IS the max-identity (registers
  * are non-negative), update/merge are branchless elementwise max loops,
- * and serialization is the raw buffer — the exact bounded-outbox shape the
- * engine's other typed aggregate (TopKStructs) establishes, running inside
- * ObjectHashAggregateExec with map-side partial aggregation.
+ * and serialization is a copy of the raw buffer — the exact bounded-outbox
+ * shape the engine's other typed aggregate (TopKStructs) establishes,
+ * running inside ObjectHashAggregateExec with map-side partial aggregation.
  *
  * A null or wrong-width input vector is a programming error upstream
  * (state rows always carry exactly m registers); nulls are skipped to keep
@@ -70,7 +70,9 @@ case class RegisterMax(
   override def eval(buf: Array[Byte]): Any =
     new GenericArrayData(buf.map(b => b: Any))
 
-  override def serialize(buf: Array[Byte]): Array[Byte] = buf
+  // a copy, as BitmapOr's fresh array: the caller may keep the bytes while
+  // this buffer goes on merging
+  override def serialize(buf: Array[Byte]): Array[Byte] = buf.clone()
 
   override def deserialize(bytes: Array[Byte]): Array[Byte] = bytes.clone()
 

@@ -51,6 +51,18 @@ class FunctionsSpec extends SparkSpec {
       xs == xs.sortBy(t => (t._1, t._2)) && xs.size <= 16 })
   }
 
+  test("register max: serialized bytes do not change when the buffer merges on") {
+    val agg = graft.functions.RegisterMax(
+      org.apache.spark.sql.catalyst.expressions.Literal.create(null,
+        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.ByteType)), m = 4)
+    val buf = agg.createAggregationBuffer()
+    buf(0) = 3; buf(2) = 7
+    val bytes = agg.serialize(buf)
+    agg.merge(buf, Array[Byte](9, 9, 9, 9))
+    assert(bytes.toSeq == Seq[Byte](3, 0, 7, 0))
+    assert(agg.deserialize(bytes).toSeq == Seq[Byte](3, 0, 7, 0))
+  }
+
   // ---- Misra-Gries heavy hitters ----
 
   private def hhRun(df: DataFrame, capacity: Int) = {
