@@ -5,11 +5,13 @@ import org.apache.spark.sql.SparkSession
 /**
  * Benchmark main. Emits TWO JSON lines:
  *  - the FULL record {"metric":"total","value":N,"unit":"sec",
- *    "queries":{...},"query_runs":{...},"supersteps":{...},"sf":...,
+ *    "queries":{...},"failed":[...],"failure_causes":{...},
+ *    "query_runs":{...},"supersteps":{...},"sf":...,
  *    "scaling":{...},"scaling_compute_bound_leg":{...}} — written to
  *    `bench_out.json` (cwd, the artifact of record) and printed first;
- *  - then a COMPACT summary line (total, slowest queries, supersteps,
- *    scaling efficiencies + the DRAM-ceiling evidence) printed LAST, sized
+ *  - then a COMPACT summary line (total, failed queries and their causes,
+ *    slowest queries, supersteps, scaling efficiencies + the DRAM-ceiling
+ *    evidence) printed LAST, sized
  *    well under 2 KB: the driver records only the final ~2000 chars of
  *    output, and round 3's 90-query full line overflowed that window,
  *    leaving the official artifact unparsed (`BENCH_r03.json parsed:
@@ -508,6 +510,11 @@ object Bench {
       legEvidence(cN, c4N, rN, r4N, triad) + "}"
   }
 
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** `s` as a JSON string literal. */
+  private def quote(s: String): String = json.writeValueAsString(s)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
@@ -518,10 +525,14 @@ object Bench {
     // JIT/codegen/parquet-reader warm-up that belongs to the harness, not
     // the operator (verified by permuting the query order).
     val s1 = session(cpus)
-    try {
-      SparkEntry.queries("q_out_degree")(s1, sfDir).count()
-      SparkEntry.queries("q_pagerank")(s1, sfDir).count()
-    } catch { case _: Throwable => }
+    // why each query last failed ("class: message"); a query whose every
+    // headline run failed reports it under "failure_causes"
+    val causes = scala.collection.mutable.Map[String, String]()
+    def recordFailure(q: String, e: Throwable): Unit =
+      causes(q) = s"${e.getClass.getName}: ${e.getMessage}"
+    for (q <- Seq("q_out_degree", "q_pagerank"))
+      try SparkEntry.queries(q)(s1, sfDir).count()
+      catch { case e: Throwable => recordFailure(q, e) }
     // Each headline run is bracketed by chained host probes (the probe
     // after query i doubles as the probe before query i+1); the per-query
     // number of record is the fastest run over all passes, and the probe
@@ -535,7 +546,8 @@ object Bench {
       var pb = hostProbeMs()
       for (name <- Headline) SparkEntry.queries.get(name).foreach { fn =>
         val t0 = System.nanoTime()
-        val ok = try { fn(s1, sfDir).count(); true } catch { case _: Throwable => false }
+        val ok = try { fn(s1, sfDir).count(); true }
+          catch { case e: Throwable => recordFailure(name, e); false }
         val sec = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
         val pa = hostProbeMs()
         runs(name) = runs(name) :+ ((sec, pb, pa))
@@ -642,8 +654,17 @@ object Bench {
     val scalingJson = legJson(8, 32, r8, r32, minProbeMs, triad)
     val computeLegJson = legJson(2, 8, r2, r8, minProbeMs, triad)
     val totalStr = f"$total%.3f"
+    // failed queries carry the -1.0 sentinel; their causes sit beside them
+    // (the compact line keeps each cause's first 160 characters to stay
+    // inside the tail window)
+    val failedNames = results.collect { case (k, v) if v < 0 => k }
+    val failed = failedNames.map(quote).mkString("[", ",", "]")
+    def failureCauses(width: Int): String = failedNames
+      .map(k => quote(k) + ":" + quote(causes.getOrElse(k, "unknown").take(width)))
+      .mkString("{", ",", "}")
     val line =
       s"""{"metric":"total","value":$totalStr,"unit":"sec","queries":$qs,""" +
+        s""""failed":$failed,"failure_causes":${failureCauses(Int.MaxValue)},""" +
         s""""query_runs":$qruns,"query_quiet_runs":$qquiet,""" +
         f""""headline_quiet_floor_ms":${headFloor * QuietFactor}%.0f,""" +
         s""""supersteps":$stepsJson,"sf":"$sfDir",""" +
@@ -656,16 +677,15 @@ object Bench {
     // compact summary LAST so it lands whole inside the driver's ~2000-char
     // tail window (see object doc): total + the slowest queries + supersteps
     // + scaling efficiencies with the union/DRAM evidence fields
-    // failed queries carry the -1.0 sentinel — rank only real timings (the
-    // sentinel's negation would otherwise outrank every sub-second query)
-    // and surface failures as their own field
-    val failed = results.collect { case (k, v) if v < 0 => "\"" + k + "\"" }
+    // rank only real timings (the sentinel's negation would otherwise
+    // outrank every sub-second query)
     val slowest = results.filter(_._2 > 0).sortBy { case (_, v) => -v }.take(15)
     val qsCompact = slowest.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
       .mkString("{", ",", "}")
     val compact =
       s"""{"metric":"total","value":$totalStr,"unit":"sec","sf":"$sfDir",""" +
-        s""""n_queries":${results.size},"failed":${failed.mkString("[", ",", "]")},""" +
+        s""""n_queries":${results.size},"failed":$failed,""" +
+        s""""failure_causes":${failureCauses(160)},""" +
         s""""queries":$qsCompact,""" +
         s""""queries_note":"slowest 15 of ${results.size} by best-of-$HeadlinePasses; full per-query bests + run/probe distributions in bench_out.json (committed)",""" +
         s""""supersteps":$stepsJson,""" +

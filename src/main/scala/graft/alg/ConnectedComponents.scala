@@ -7,13 +7,29 @@ import graft.core.{Adjacency, Graph, Lineage, StepResult, Superstep}
 
 /**
  * Weakly connected components — HashMin label propagation with a delta
- * frontier, matching the reference's hybrid CC exactly
- * (`/root/reference/src/alg/totem_cc_hybrid.cu:392-463`):
+ * frontier and a union-find inside each partition, reaching the fixpoint
+ * of Totem's hybrid CC exactly (`src/alg/totem_cc_hybrid.cu:392-463`):
  * labels init to the vertex's own (global) id; an active vertex pushes its
- * label to neighbors; a neighbor keeps min(old,new) and re-activates on
- * change; converged when nothing changed. Final label = min vertex id in the
- * component (`totem_cc_unittest.cu:103-143`) — exact parity by construction
- * since both run min over the same id space.
+ * label; a vertex keeps min(old,new) and re-activates on change; converged
+ * when nothing changed. Final label = min vertex id in the component
+ * (`totem_cc_unittest.cu:103-143`).
+ *
+ * Per-partition union-find: as a Totem partition finishes its local work
+ * before the one communication phase (`engine_execute`), each task first
+ * unions the rows `(src, comp, nbrs)` of the active sources it owns into a
+ * forest and offers every vertex it touched the minimum, over its tree, of
+ * the rows' labels and the member ids — the local-contraction step of
+ * MapReduce CC (Kiveris et al., "Connected Components in MapReduce and
+ * Beyond"). A candidate is always the label or id of a vertex in the same
+ * component, and never higher than the HashMin message the same rows would
+ * send, so labels still only decrease and the fixpoint is unchanged: the
+ * minimum vertex id per component. A label crosses a whole partition-local
+ * tree per superstep instead of one hop (the 1,000-page crawl graph
+ * converges in 2 supersteps where HashMin took 5), and the exchange carries
+ * one candidate per touched vertex and forest instead of one per edge. The
+ * forest lives on the task's heap, outside Spark's task-memory accounting,
+ * so it is flushed every [[ForestCap]] vertices; a forest over any subset
+ * of the rows still yields valid candidates.
  *
  * The frontier Dataset is the reference's sparse frontier
  * (`totem_alg.h:361-377`); only changed vertices generate messages, so late
@@ -22,6 +38,11 @@ import graft.core.{Adjacency, Graph, Lineage, StepResult, Superstep}
 object ConnectedComponents {
 
   final case class Result(components: DataFrame, metrics: Seq[graft.core.StepMetrics])
+
+  /** Vertices a partition's union-find forest holds before it is flushed
+   * (its labels emitted, a new forest started): the bound on the heap the
+   * forest takes outside Spark's task-memory accounting. */
+  final val ForestCap = 1 << 20
 
   /** `edges` may be directed; WCC symmetrizes internally.
    *
@@ -43,10 +64,10 @@ object ConnectedComponents {
    * two extra O(V) shuffles per superstep in exchange for skipped O(E)
    * message rounds. Off by default: on low-diameter web/RMAT graphs HashMin
    * already converges in ~diameter rounds and the jump removes NONE of them
-   * (measured on rmat s20 @32 cores: 6 supersteps either way, +5% shuffle
-   * bytes with the jump) — enable it for high-diameter inputs (meshes,
-   * chains, road networks) where label distance, not graph distance,
-   * dominates round count. */
+   * (measured on rmat s20 @32 cores before the per-partition union-find:
+   * 6 supersteps either way, +5% shuffle bytes with the jump) — enable it
+   * for high-diameter inputs (meshes, chains, road networks) where label
+   * distance, not graph distance, dominates round count. */
   /** `warmStart`: a previous snapshot's (vid, component) assignment — the
    * recrawl path (mirror of `PageRank.warmStart`): labels initialize to the
    * OLD component minimum instead of the vertex's own id. Any valid snapshot
@@ -79,6 +100,8 @@ object ConnectedComponents {
     // cut: the symmetrized edge set feeds the adjacency build AND the degree
     // pass — uncut, each re-ran the union+distinct AND the upstream edge
     // derivation (twice each, both directions): four corpus passes at scale
+    val spark = edges.sparkSession
+    import spark.implicits._
     val und = Lineage.cut(Graph.undirected(edges))
     val adj = Adjacency.build(und).persist(StorageLevel.MEMORY_AND_DISK)
     val degs = Graph.outDegrees(und).persist(StorageLevel.MEMORY_AND_DISK)
@@ -127,10 +150,17 @@ object ConnectedComponents {
       val dense = deltaCount > denseThreshold * totalV
       val trv = if (dense) totalEdges else frontEdges
       val pushFrom = if (dense) state else state.filter(col("changed"))
+      // the join keeps the adjacency's HashPartitioning(src), so each task
+      // closes labels over the edges of the sources it owns before the one
+      // message exchange; the map-side min then combines candidates that
+      // several forests emitted for the same vertex
       val msgs = adj.join(pushFrom.hint("shuffle_hash"),
           adj(Graph.SRC) === pushFrom(Graph.VID))
-        .select(explode(col("nbrs")).as(Graph.VID), col("comp"))
-        .groupBy(Graph.VID).agg(min("comp").as("cand"))
+        .select(col(Graph.SRC), col("comp"), col("nbrs"))
+        .as[(Long, Long, Array[Long])]
+        .mapPartitions(localLabels(_))
+        .toDF(Graph.VID, "cand")
+        .groupBy(Graph.VID).agg(min("cand").as("cand"))
       // shuffle_hash on the O(V) msgs side: SMJ would re-sort two O(V)
       // frames every superstep for no benefit (the output is re-hashed by
       // the next superstep anyway)
@@ -164,6 +194,73 @@ object ConnectedComponents {
     adj.unpersist(blocking = false); degs.unpersist(blocking = false)
     Lineage.release(und)
     Result(outcome.state.select(col(Graph.VID), col("comp").as("component")), outcome.metrics)
+  }
+
+  /** The per-partition labeler: unions each row's source with its
+   * neighbours and emits one `(vid, cand)` per distinct vertex of the
+   * forest, `cand` the minimum over the vertex's tree of the rows' `comp`
+   * and the member ids. A forest is flushed between rows once it holds
+   * `cap` vertices, so one row never spans two forests and its neighbours'
+   * candidates never exceed its `comp`; a vertex seen by several forests is
+   * emitted once by each. */
+  private[graft] def localLabels(rows: Iterator[(Long, Long, Array[Long])],
+                                 cap: Int = ForestCap): Iterator[(Long, Long)] =
+    Iterator.continually {
+      val f = new Forest
+      while (f.size < cap && rows.hasNext) {
+        val (src, comp, nbrs) = rows.next()
+        f.add(src, comp, nbrs)
+      }
+      f
+    }.takeWhile(_.size > 0).flatMap(_.labels)
+
+  /** Union-find over vertex ids (union by size, path halving); `low(r)` is
+   * the least label or id offered to the tree rooted at slot `r`. */
+  private final class Forest {
+    private val slotOf = scala.collection.mutable.LongMap.empty[Int]
+    private var ids = new Array[Long](64)
+    private var parent = new Array[Int](64)
+    private var sizes = new Array[Int](64)
+    private var low = new Array[Long](64)
+    var size = 0
+
+    private def slot(v: Long): Int = slotOf.getOrElseUpdate(v, {
+      if (size == ids.length) {
+        val n = 2 * size
+        ids = java.util.Arrays.copyOf(ids, n); parent = java.util.Arrays.copyOf(parent, n)
+        sizes = java.util.Arrays.copyOf(sizes, n); low = java.util.Arrays.copyOf(low, n)
+      }
+      ids(size) = v; parent(size) = size; sizes(size) = 1; low(size) = v
+      size += 1
+      size - 1
+    })
+
+    private def find(i0: Int): Int = {
+      var i = i0
+      while (parent(i) != i) { parent(i) = parent(parent(i)); i = parent(i) }
+      i
+    }
+
+    /** Merge the trees rooted at `a` and `b`; returns the new root. */
+    private def link(a: Int, b: Int): Int =
+      if (a == b) a
+      else {
+        val (big, small) = if (sizes(a) >= sizes(b)) (a, b) else (b, a)
+        parent(small) = big
+        sizes(big) += sizes(small)
+        low(big) = math.min(low(big), low(small))
+        big
+      }
+
+    def add(src: Long, comp: Long, nbrs: Array[Long]): Unit = {
+      var root = find(slot(src))
+      var i = 0
+      while (i < nbrs.length) { root = link(root, find(slot(nbrs(i)))); i += 1 }
+      low(root) = math.min(low(root), comp)
+    }
+
+    def labels: Iterator[(Long, Long)] =
+      Iterator.range(0, size).map(i => (ids(i), low(find(i))))
   }
 
   /** Per-component vertex counts + biggest component — `component_set_t`

@@ -168,11 +168,19 @@ object Ann {
    * only when a vector's whole neighborhood is anti-correlated) scores
    * 0.0 rather than null so the margin ordering stays engine-identical.
    *
-   * Scale shape: the query side broadcasts (as in [[bruteForceTopK]]) and
-   * the candidate side is ≤ |Q|·k vectors, semi-joined out of the corpus
-   * and broadcast back — three corpus scans total, no corpus shuffle. At
-   * mining scale substitute the LSH/IVF top-k for the brute-force stages;
-   * the margin arithmetic is unchanged.
+   * Plan shape (pinned in `PlanShapeSpec`): the query side broadcasts (as
+   * in [[bruteForceTopK]]) into a nested-loop join with the corpus, and
+   * that per-query top-k is persisted. The corpus is scanned three times:
+   * for the query top-k, to semi-join the ≤ |Q|·k candidate vectors out of
+   * it, and against those candidates broadcast back. Outside the persisted
+   * top-k the plan has 7 shuffle exchanges and 1 broadcast nested-loop join
+   * (corpus × candidates), and two exchanges move corpus rows: the
+   * sort-merge semi-join shuffles the corpus by `vec_id`, and the `cSum`
+   * `row_number` window partitioned by `__cid` shuffles the corpus ×
+   * candidates product (a partial `WindowGroupLimit` cuts it on the map
+   * side to k rows per candidate and task). At mining scale substitute the
+   * LSH/IVF top-k for the brute-force stages; the margin arithmetic is
+   * unchanged.
    */
   def marginTopK(corpus: DataFrame, queries: DataFrame, k: Int, m: Int,
                  id: String = "vec_id", vec: String = "embedding",

@@ -167,7 +167,10 @@ class SuperstepSpec extends SparkSpec {
     // full run for reference
     val expected = toMap[Long](ConnectedComponents.run(edges).components)
     // partial run: cap supersteps below convergence, then resume
-    ConnectedComponents.run(edges, checkpointDir = Some(dir), maxSupersteps = 3)
+    val capped = ConnectedComponents.run(edges, checkpointDir = Some(dir), maxSupersteps = 3)
+    // the cap must bind, or the resume below starts from a finished run
+    assert(capped.metrics.size == 3)
+    assert(!capped.metrics.last.converged)
     val resumed = ConnectedComponents.run(edges, checkpointDir = Some(dir), resume = true)
     assert(toMap[Long](resumed.components) == expected)
   }
