@@ -172,11 +172,12 @@ object Ann {
    * in [[bruteForceTopK]]) into a nested-loop join with the corpus, and
    * that per-query top-k is persisted. The corpus is scanned three times:
    * for the query top-k, to semi-join the ≤ |Q|·k candidate vectors out of
-   * it, and against those candidates broadcast back. Outside the persisted
-   * top-k the plan has 7 shuffle exchanges and 1 broadcast nested-loop join
-   * (corpus × candidates), and two exchanges move corpus rows: the
-   * sort-merge semi-join shuffles the corpus by `vec_id`, and the `cSum`
-   * `row_number` window partitioned by `__cid` shuffles the corpus ×
+   * it, and against those candidates broadcast back. The semi-join
+   * broadcasts the distinct candidate ids (a broadcast hash join), so the
+   * corpus is never shuffled by `vec_id`. Outside the persisted top-k the
+   * plan has 6 shuffle exchanges and 1 broadcast nested-loop join (corpus ×
+   * candidates); the one exchange that moves corpus-derived rows is the
+   * `cSum` `row_number` window partitioned by `__cid`, over the corpus ×
    * candidates product (a partial `WindowGroupLimit` cuts it on the map
    * side to k rows per candidate and task). At mining scale substitute the
    * LSH/IVF top-k for the brute-force stages; the margin arithmetic is
@@ -196,7 +197,7 @@ object Ann {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val qSum = top.groupBy(qid).agg(sum("sim_n").as("qsum"))
     val candVecs = corpus
-      .join(top.select(col(id)).distinct(), Seq(id), "left_semi")
+      .join(broadcast(top.select(col(id)).distinct()), Seq(id), "left_semi")
       .select(col(id).as("__cid"), col(vec).as("__ce"))
     val cSum = corpus.join(broadcast(candVecs))
       .filter(col(id) =!= col("__cid"))

@@ -12,7 +12,8 @@ import org.apache.spark.sql.functions._
  * a range repartition (each task owns one contiguous sort range), a
  * per-partition window, and a broadcast prefix-sum of per-partition totals
  * (a tiny driver array — numBuckets entries). O(n log n) shuffle, no
- * single-task stage; the same layout trick as `EdgeExtract.urlDictionary`.
+ * single-task stage; `EdgeExtract.urlDictionary` uses the same prefix-sum
+ * trick over hash buckets of urls instead of sort ranges.
  *
  * Range boundaries come from Spark's sampling RangePartitioner; they affect
  * only WHERE a range is computed, never the result, because `order` must be

@@ -1,8 +1,10 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+import graft.core.Lineage
 
 /**
  * pages(url, warc_ts, html, text, lang) → url→url edge table — the front of
@@ -10,10 +12,15 @@ import org.apache.spark.sql.functions._
  * edge-list parser, `/root/reference/src/totem/totem_graph.cu:30-251`; link
  * extraction itself has no reference implementation and is defined here).
  *
- * Steps (all declarative, codegen'd — no UDFs):
- *  1. href harvest: `regexp_extract_all` over the raw html;
- *  2. URL dictionary `urls(url, vid)` with dense deterministic ids;
- *  3. edges = links dictionary-joined on both endpoints.
+ * [[edges]] steps (all declarative, codegen'd — no UDFs), each read once
+ * from a lineage cut ([[graft.core.Lineage]]) rather than recomputed:
+ *  1. one href harvest: `regexp_extract_all` over the raw html, cut as
+ *     `(src_url, dst_url)` — the regex runs once per page;
+ *  2. one URL dictionary `(url, vid)` with dense deterministic ids
+ *     ([[urlDictionary]]), built from that cut;
+ *  3. edges = links hash-joined to the dictionary on both endpoints
+ *     (`shuffle_hash` on the O(V) dictionary side, as in PageRank — no
+ *     sort-merge join), returned as an eager cut.
  */
 object EdgeExtract {
 
@@ -32,27 +39,33 @@ object EdgeExtract {
   /**
    * Deterministic dense vertex ids. Hash ids collide at 10^12 urls, so ids
    * come from a total order over urls. `zipWithIndex`-free, pure SQL:
-   * a global `row_number` would single-task; instead ids are assigned
-   * range-partitioned: sort-bucket urls, count per bucket, prefix-sum the
-   * bucket offsets (tiny driver array), then per-bucket row_number + offset.
-   * O(n log n) shuffle, no single-task bottleneck — survives 10^12 rows.
+   * a global `row_number` would single-task; instead ids are assigned per
+   * hash bucket: bucket = `pmod(xxhash64(url), buckets)`, count per bucket,
+   * prefix-sum the bucket offsets (tiny driver array), then id = bucket
+   * offset + `row_number` by url within the bucket. O(n log n) shuffle, no
+   * single-task bottleneck — survives 10^12 rows.
+   *
+   * Eager: the distinct bucketed urls are cut once (the bucket counts and
+   * the `row_number` both read that cut, which is released before
+   * returning), and the dictionary comes back as a [[Lineage.cut]] frame —
+   * release it once every plan reading it has run.
    */
-  def urlDictionary(pages: DataFrame, allUrls: DataFrame, buckets: Int = 256): DataFrame = {
-    val urls = allUrls.select(col("url")).distinct()
-    val bucketed = urls.withColumn("b", pmod(xxhash64(col("url")), lit(buckets)).cast("int"))
+  def urlDictionary(allUrls: DataFrame, buckets: Int = 256): DataFrame = {
+    val spark = allUrls.sparkSession
+    val bucketed = Lineage.cut(allUrls.select(col("url")).distinct()
+      .withColumn("b", pmod(xxhash64(col("url")), lit(buckets)).cast("int")))
     val counts = bucketed.groupBy("b").count().collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
     val offsets = (0 until buckets).scanLeft(0L)((acc, b) => acc + counts.getOrElse(b, 0L))
-    val spark = pages.sparkSession
     val offDf = spark.createDataFrame(
-      spark.sparkContext.parallelize((0 until buckets).map(b => org.apache.spark.sql.Row(b, offsets(b))), 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("b", org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("off", org.apache.spark.sql.types.LongType))))
-    bucketed
+      spark.sparkContext.parallelize((0 until buckets).map(b => Row(b, offsets(b))), 1),
+      StructType(Seq(StructField("b", IntegerType), StructField("off", LongType))))
+    val dict = Lineage.cut(bucketed
       .withColumn("rn", row_number().over(Window.partitionBy("b").orderBy("url")).cast("long") - 1L)
       .join(broadcast(offDf), "b")
-      .select(col("url"), (col("off") + col("rn")).as("vid"))
+      .select(col("url"), (col("off") + col("rn")).as("vid")))
+    Lineage.release(bucketed)
+    dict
   }
 
   private val AnchorPattern =
@@ -129,14 +142,22 @@ object EdgeExtract {
 
   /** Full pipeline: pages → edges(src: Long, dst: Long). Dangling link
    * targets (urls never crawled) still get vertex ids — they are real
-   * vertices of the web graph (zero out-degree). */
+   * vertices of the web graph (zero out-degree).
+   *
+   * Eager: the harvest, the dictionary and the edge table all run inside
+   * this call. The result is a [[Lineage.cut]] frame (so
+   * [[graft.core.Graph.ensureCut]] does not cut it again); the link and
+   * dictionary cuts are released before returning, so the result's blocks
+   * are the only ones this call leaves persisted. */
   def edges(pages: DataFrame): DataFrame = {
-    val l = links(pages)
-    val all = pages.select(col("url"))
-      .union(l.select(col("dst_url").as("url")))
-    val dict = urlDictionary(pages, all)
-    l.join(dict.withColumnRenamed("url", "src_url").withColumnRenamed("vid", "src"), "src_url")
-      .join(dict.withColumnRenamed("url", "dst_url").withColumnRenamed("vid", "dst"), "dst_url")
-      .select(col("src"), col("dst"))
+    val l = Lineage.cut(links(pages))
+    val dict = urlDictionary(pages.select(col("url")).union(l.select(col("dst_url").as("url"))))
+    def ids(end: String) =
+      dict.select(col("url").as(s"${end}_url"), col("vid").as(end)).hint("shuffle_hash")
+    val out = Lineage.cut(l.join(ids("src"), "src_url").join(ids("dst"), "dst_url")
+      .select(col("src"), col("dst")))
+    Lineage.release(l)
+    Lineage.release(dict)
+    out
   }
 }

@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.Platform
+import graft.core.Lineage
 import graft.gen.GraphGen
 import graft.text.{TextExtract, EdgeExtract}
 
@@ -37,16 +40,49 @@ class PipelineSpec extends SparkSpec {
     val edges = EdgeExtract.edges(pages).cache()
     assert(edges.count() > 0)
     // ids dense in [0, V)
-    val dict = EdgeExtract.urlDictionary(pages,
-      pages.select(col("url")).union(EdgeExtract.links(pages).select(col("dst_url").as("url"))))
+    def allUrls =
+      pages.select(col("url")).union(EdgeExtract.links(pages).select(col("dst_url").as("url")))
+    val dict = EdgeExtract.urlDictionary(allUrls)
     val n = dict.count()
     val (mn, mx) = dict.agg(min("vid"), max("vid")).collect()(0) match {
       case r => (r.getLong(0), r.getLong(1))
     }
     assert(mn == 0L && mx == n - 1)
     // dictionary deterministic across evaluations
-    assert(dict.except(EdgeExtract.urlDictionary(pages,
-      pages.select(col("url")).union(EdgeExtract.links(pages).select(col("dst_url").as("url"))))).isEmpty)
+    val again = EdgeExtract.urlDictionary(allUrls)
+    assert(dict.except(again).isEmpty)
+    Lineage.release(dict)
+    Lineage.release(again)
+  }
+
+  test("edges: ids replay the bucket rule on the driver; the result is the call's one cut") {
+    val pages = GraphGen.pages(spark, 1000, seed = 1)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val edges = EdgeExtract.edges(pages)
+    // RDDs released by earlier suites may leave meanwhile: count only new ones
+    val added = sc.getPersistentRDDs.keySet -- before
+    // id rule: bucket = pmod(xxhash64(url), 256), id = prefix-summed
+    // offset of the bucket + rank of the url within it
+    val Href = """href="(http[^"]*)"""".r
+    val links = pages.select(col("url"), col("html").cast("string")).collect()
+      .flatMap(r => Href.findAllMatchIn(r.getString(1)).map(m => r.getString(0) -> m.group(1)))
+    val urls = (pages.select(col("url")).collect().map(_.getString(0)) ++ links.map(_._2)).distinct
+    def bucket(u: String): Int = {
+      val b = u.getBytes("UTF-8")
+      Math.floorMod(XXH64.hashUnsafeBytes(b, Platform.BYTE_ARRAY_OFFSET, b.length, 42L), 256L).toInt
+    }
+    val byBucket = urls.groupBy(bucket)
+    val offsets = (0 until 256).scanLeft(0L)((acc, b) => acc + byBucket.get(b).fold(0)(_.length))
+    val id = byBucket.toSeq.flatMap { case (b, us) =>
+      us.sorted.zipWithIndex.map { case (u, i) => u -> (offsets(b) + i) }
+    }.toMap
+    assert(id.values.toSeq.sorted == (0L until urls.length.toLong))
+    val got = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(got.sorted.toSeq == links.map { case (s, d) => (id(s), id(d)) }.sorted.toSeq)
+    assert(added.size == 1, "only the result's blocks may stay persisted")
+    assert(Lineage.isCut(edges))
+    Lineage.release(edges)
   }
 
   test("end-to-end: pages -> edges -> pagerank produces mass ~ (1-d) + d*contribs") {

@@ -7,7 +7,7 @@ import org.apache.spark.ListenerDrain
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
 import org.apache.spark.sql.execution.{ExpandExec, FileSourceScanExec, FormattedMode,
-  QueryExecution, SortExec, SparkPlan, TakeOrderedAndProjectExec}
+  GenerateExec, QueryExecution, SortExec, SparkPlan, TakeOrderedAndProjectExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, QueryStageExec}
 import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, ObjectHashAggregateExec,
   SortAggregateExec}
@@ -25,7 +25,7 @@ import graft.dedup.{Dedup, MinHash}
 import graft.gen.GraphGen
 import graft.operators.AsOfJoin
 import graft.streaming.EventStream
-import graft.text.{Curation, Dsir, Repetition, TextAnalysis, Tokenize, UrlOps}
+import graft.text.{Curation, Dsir, EdgeExtract, Repetition, TextAnalysis, Tokenize, UrlOps}
 
 /**
  * Plan-shape gate: the physical plans of the engine's real entry points,
@@ -260,16 +260,34 @@ class PlanShapeSpec extends SparkSpec {
     Case("Quantize.codes: 1 exchange, codebook broadcast",
       () => plan(Quantize.codes(embeddings)),
       Shape(exactly(1), also = Seq(has[BroadcastHashJoinExec]))),
-    Case("Ann.marginTopK: 7 exchanges, 1-row broadcast loop join",
+    Case("Ann.marginTopK: 6 exchanges, candidate ids broadcast into the semi-join",
       () => plan(Ann.marginTopK(embeddings,
         embeddings.filter(col("vec_id") < 3)
           .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding")),
         k = 5, m = 3)),
-      Shape(exactly(7), bnlj = 1)),
+      Shape(exactly(6), bnlj = 1, also = Seq(has[BroadcastHashJoinExec]))),
     Case("Parquet scan: documents reads 3 of 5 columns, lang filter pushed",
       () => plan(docs.filter(col("lang") === "en").select(col("doc_id"), length(col("text")))),
       Shape(exactly(0), also = Seq(scanReads("doc_id", "text", "lang"), pushesFilterOn("lang"))))
   )
+
+  // a whole-call case: its claims are about the plans one call executes
+  // together (harvest cut, bucket cut, counts, dictionary cut, edge cut,
+  // the write of the result), not about any single plan
+  test("EdgeExtract.edges: one href harvest, endpoints hash-joined, no sort-merge join") {
+    val plans = executed {
+      EdgeExtract.edges(GraphGen.pages(spark, 300, seed = 3))
+        .write.format("noop").mode("overwrite").save()
+    }.map(_._2.executedPlan)
+    def total[T <: SparkPlan: ClassTag]: Int = plans.map(nodes[T](_).size).sum
+    assert(total[GenerateExec] == 1, "the href regex must run once per page")
+    assert(total[SortMergeJoinExec] == 0)
+    assert(total[ShuffledHashJoinExec] == 2, "both endpoint lookups must be shuffled hash joins")
+    plans.foreach { p =>
+      val problems = violations(p, Shape(atMost(3)))
+      assert(problems.isEmpty, s"${problems.mkString("; ")}\n${p.treeString}")
+    }
+  }
 
   cases.foreach { c =>
     test(c.name) {
