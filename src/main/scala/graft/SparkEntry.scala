@@ -24,11 +24,13 @@ object SparkEntry {
 
   /** Flagship: full north-rule pipeline on a generated Common-Crawl-style
    * corpus — pages → html→text/link extraction → edge table → 5-round
-   * PageRank; returns the top pages by rank. */
+   * PageRank; returns the top pages by rank. The edge cut is released once
+   * the rank has run: the result reads only PageRank's final state. */
   def entry(spark: SparkSession): DataFrame = {
     val pages = graft.gen.GraphGen.pages(spark, 2000, seed = 42)
     val edges = graft.text.EdgeExtract.edges(pages)
-    val ranks = graft.alg.PageRank.run(edges).ranks
+    val ranks = try graft.alg.PageRank.run(edges).ranks
+      finally graft.core.Lineage.release(edges)
     ranks.orderBy(col("rank").desc, col("vid")).limit(20)
   }
 

@@ -2,7 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import graft.core.Lineage
 import graft.text.TextAnalysis
 
 /**
@@ -34,122 +34,138 @@ object Dedup {
    * (Chaudhuri et al. SSJoin / Xiao et al. PPJoin): J = |A∩B| / |A∪B| over
    * DISTINCT shingle sets.
    *
-   * Candidate generation: order every document's shingles by global
-   * (frequency, shingle) — rarest first — and emit only the PREFIX of
-   * length |A| - ⌈t·|A|⌉ + 1. Two sets with J ≥ t must share a prefix
-   * shingle under any consistent total order (if all prefix shingles were
-   * disjoint, the overlap would be too small), so recall is 100%. Because
-   * hot stopword-shingles sort LAST they almost never enter a prefix —
-   * this is what kills the O(Σ freq²)-pairs blowup of a naive
-   * shared-shingle join at web scale. Candidates are then verified with
-   * the exact intersection over the full (sorted-array) shingle sets.
+   * Candidate generation: number every shingle (`sid`) in the global
+   * (frequency, shingle) order — rarest first — and emit only each
+   * document's PREFIX: its |A| - ⌈t·|A|⌉ + 1 lowest ids. Two sets with
+   * J ≥ t must share a prefix shingle under any consistent total order (if
+   * all prefix shingles were disjoint, the overlap would be too small), so
+   * recall is 100%. Because hot stopword-shingles sort LAST they almost
+   * never enter a prefix — this is what kills the O(Σ freq²)-pairs blowup
+   * of a naive shared-shingle join at web scale. Candidates are then
+   * verified with the exact intersection over each document's full set
+   * (a bitmap over the ids, or the id array when the universe is large).
+   *
+   * One row per pair, without a `distinct`: a pair meets once per shared
+   * prefix shingle, and only the row whose `sid` is the pair's FIRST
+   * shared shingle (no common id below it in the two full sets) is kept.
+   * This is exact. If any candidate row of a pair survives the filters,
+   * the first common shingle s* of the full sets sorts at or before that
+   * row's shingle in both documents, so it lies in both prefixes; its
+   * frequency is at most the row's (ids follow frequency), so it passes
+   * `maxShingleFreq`; and its ranks are no later, so its positional bound
+   * is at least as large. Hence every such pair keeps exactly its s* row.
    *
    * `maxShingleFreq` remains a candidate-stage safety cap (a pair whose
    * ONLY shared prefix shingle is hotter than the cap is dropped); at
    * verify scale it never binds, so the DuckDB oracle (exhaustive join)
    * still matches exactly.
+   *
+   * Memory: every aggregate runs in a stage of its own and the joins are
+   * shuffled hash joins, so a task holds at most one memory-managed
+   * operator. There is no per-document window: each document's sorted id
+   * array is its shingle list in prefix order, so the prefix (and each
+   * shingle's rank) is read off it row by row. The shingle rows and the
+   * per-document sets are each built once; the call returns its result as
+   * an eager [[graft.core.Lineage.cut]] (the caller releases it) and
+   * releases every intermediate it made.
    */
   def ngramJaccardPairs(docs: DataFrame, n: Int = 5, threshold: Double = 0.7,
                         maxShingleFreq: Int = 1000,
                         id: String = "doc_id", text: String = "text",
                         bitmapMaxUniverse: Long = BitmapMaxUniverse): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // normalization hoisted into a projection: nested in the shingle lambda
-    // it would re-execute per array element (O(L²) per document).
-    // Dedup is PER DOCUMENT, so array_distinct BEFORE the explode does it
-    // as a narrow per-row pass — a global .distinct() here shuffled the
-    // full pre-dedup corpus (O(Σ L) rows) for nothing (measured: the
-    // largest single stage of the join at sf0.1)
-    val sh = docs.select(col(id), TextAnalysis.normalizeForShingles(col(text)).as("__t"))
-      .select(col(id),
-        explode_outer(array_distinct(TextAnalysis.rawShingles(col("__t"), n))).as("sh"))
-      .filter(col("sh").isNotNull)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val freq = sh.groupBy("sh").agg(count(lit(1)).as("f"))
-    // per-document rank in global (f, sh) order; window is per-doc (bounded
-    // by document length), not global
-    val ranked = sh.join(freq, "sh")
-      .withColumn("r", row_number().over(Window.partitionBy(id).orderBy(col("f"), col("sh"))))
-    val sizes = sh.groupBy(id).agg(count(lit(1)).as("sz"))
-    val prefix = ranked.join(sizes, id)
-      .filter(col("r") <= col("sz") - ceil(lit(threshold) * col("sz")) + 1)
-      .filter(col("f") <= maxShingleFreq)
-    // PPJoin POSITIONAL filter (Xiao et al.), applied per joined row BEFORE
-    // the distinct: a shared prefix shingle at ranks (ra, rb) bounds the
-    // overlap by 1 + min(|A|-ra, |B|-rb) (everything shared sorts at or
-    // after it), and J ≥ t needs overlap ≥ t/(1+t)·(|A|+|B|). For the FIRST
-    // common shingle the bound ≥ the true overlap, so no qualifying pair is
-    // lost — but corpus-wide stopword-ish shingles (late ranks everywhere)
-    // stop producing candidates, which is what kills the near-all-pairs
-    // blowup on vocabulary-heavy corpora.
+    // it would re-execute per array element (O(L²) per document). Dedup is
+    // PER DOCUMENT (array_distinct, a narrow pass)
+    val sh = Lineage.cut(
+      docs.select(col(id), TextAnalysis.normalizeForShingles(col(text)).as("__t"))
+        .select(col(id), explode(array_distinct(TextAnalysis.rawShingles(col("__t"), n))).as("sh")))
+    // dense shingle ids in the global (f, sh) prefix order; ids below
+    // `underCap` are exactly the shingles with f <= maxShingleFreq
+    val dict = graft.core.Ranking.globalRank(
+      sh.groupBy("sh").agg(count(lit(1)).as("f")), Seq(col("f"), col("sh")), "sid",
+      buckets = 32)
+    val stats = dict.agg(count(lit(1)), count(when(col("f") <= maxShingleFreq, 1))).head()
+    val (universe, underCap) = (stats.getLong(0), stats.getLong(1))
+    // verify representation: two physical strategies, same exact semantics
+    // (an AQE-style adaptive choice):
+    //  - small shingle UNIVERSE (vocabulary-limited corpora — where, notably,
+    //    candidate pruning is weakest and candidate counts largest): each
+    //    doc's set is a fixed-width bitmap over the ids; |A∩B| =
+    //    Σ bit_count(a & b) — pure integer ops, ~50× cheaper per pair than
+    //    hashing arrays. BitmapOr sets one bit per shingle row into one
+    //    mutable width-long buffer;
+    //  - huge universe (real web text): the doc's id array (candidates are
+    //    few there — discriminative shingles make the prefix filter
+    //    selective).
+    // Either way each document also gets its ids sorted, which is its
+    // (f, sh)-ordered shingle list: the prefix is read off it row by row.
+    val bitmaps = universe <= bitmapMaxUniverse
+    val ids = array_sort(collect_list("sid")).as("ids")
+    val byDoc = sh.join(dict.hint("shuffle_hash"), "sh").groupBy(id)
+    val sets = Lineage.cut(
+      if (bitmaps) byDoc.agg(ids,
+        graft.functions.BitmapOr.agg(col("sid"), math.max(1, ((universe + 63) / 64).toInt)).as("bm"))
+      else byDoc.agg(ids))
+    val set = if (bitmaps) "bm" else "ids"
+    Lineage.release(sh)
+    // one row per prefix shingle: (id, sid, r = its 1-based rank in the
+    // document, sz = the set size). The size rides inside the generator:
+    // `select(size(ids), explode(..))` would copy the whole array into every
+    // exploded row (O(L²) per document)
+    val sz = size(col("ids"))
+    val prefix = sets.select(col(id), explode(transform(
+        slice(col("ids"), lit(1), (sz - ceil(lit(threshold) * sz) + 1).cast("int")),
+        (x, i) => struct(x.as("sid"), (i + 1).as("r"), sz.as("sz")))).as("__p"))
+      .select(col(id), col("__p.sid").as("sid"), col("__p.r").as("r"), col("__p.sz").as("sz"))
+      .filter(col("sid") < underCap)
+    // PPJoin POSITIONAL filter (Xiao et al.): a shared prefix shingle at
+    // ranks (ra, rb) bounds the overlap by 1 + min(|A|-ra, |B|-rb)
+    // (everything shared sorts at or after it), and J ≥ t needs overlap ≥
+    // t/(1+t)·(|A|+|B|). For the FIRST common shingle the bound ≥ the true
+    // overlap, so no qualifying pair is lost — but corpus-wide stopword-ish
+    // shingles (late ranks everywhere) stop producing candidates.
     val alpha = lit(threshold / (1.0 + threshold))
-    val cand = prefix.select(col(id).as("ia"), col("sh"), col("r").as("ra"), col("sz").as("na"))
-      .join(prefix.select(col(id).as("ib"), col("sh"), col("r").as("rb"), col("sz").as("nb")), "sh")
+    val cand = prefix.select(col(id).as("ia"), col("sid"), col("r").as("ra"), col("sz").as("na"))
+      .join(prefix.select(col(id).as("ib"), col("sid"), col("r").as("rb"), col("sz").as("nb"))
+        .hint("shuffle_hash"), "sid")
       .filter(col("ia") < col("ib"))
-      // LENGTH filter (safe: J = |∩|/|∪| ≤ min(|A|,|B|)/max(|A|,|B|), so
-      // J ≥ t forces the set sizes within a factor t of each other) —
-      // prunes before the positional bound on corpora where prefix
-      // selectivity is weak (vocabulary-limited: everyone shares prefixes)
+      // LENGTH filter (safe: J ≤ min(|A|,|B|)/max(|A|,|B|), so J ≥ t forces
+      // the set sizes within a factor t of each other)
       .filter(least(col("na"), col("nb")) + lit(1e-9)
         >= lit(threshold) * greatest(col("na"), col("nb")))
       .filter(lit(1) + least(col("na") - col("ra"), col("nb") - col("rb")) + lit(1e-9)
         >= alpha * (col("na") + col("nb")))
-      .select("ia", "ib").distinct()
-    // verify: exact |A∩B| on the candidates only. Two physical strategies,
-    // same exact semantics (an AQE-style adaptive choice):
-    //  - small shingle UNIVERSE (vocabulary-limited corpora — where, notably,
-    //    candidate pruning is weakest and candidate counts largest): encode
-    //    each doc's set as a fixed-width bitmap over dense shingle ids;
-    //    |A∩B| = Σ bit_count(a & b) via zip_with — pure codegen'd integer
-    //    ops, ~50× cheaper per pair than hashing string arrays;
-    //  - huge universe (real web text): per-pair array_intersect on the
-    //    string sets (candidates are few there — discriminative shingles
-    //    make the prefix filter selective).
-    val universe = freq.count()
-    if (universe <= bitmapMaxUniverse) {
-      val width = ((universe + 63) / 64).toInt
-      val sid = sh.join(
-        graft.core.Ranking.globalRank(freq.select("sh"), Seq(col("sh")), "sid", buckets = 32),
-        "sh").select(col(id), col("sid"))
-      // bitmap build via the BitmapOr typed aggregate: O(1) per shingle
-      // row into one mutable width-long buffer. The former declarative
-      // fold (collect_list + aggregate-with-transform) copied the whole
-      // accumulator array per element — O(setSize × width) churn per doc,
-      // a GCLocker OOM at the bench 10× corpus (width grows with the
-      // universe, so the fold was effectively quadratic in corpus scale).
-      val bm = sid.groupBy(id).agg(count(lit(1)).as("sz"),
-        graft.functions.BitmapOr.agg(col("sid"), width).as("bm"))
-      cand
-        .join(bm.select(col(id).as("ia"), col("bm").as("ba"), col("sz").as("na")), "ia")
-        .join(bm.select(col(id).as("ib"), col("bm").as("bb"), col("sz").as("nb")), "ib")
-        .withColumn("inter",
-          expr("aggregate(zip_with(ba, bb, (x, y) -> bit_count(x & y)), 0, (acc, v) -> acc + v)"))
-        .select(col("ia").as("id_a"), col("ib").as("id_b"),
-          (col("inter").cast("double") / (col("na") + col("nb") - col("inter"))).as("jaccard"))
-        .filter(col("jaccard") >= threshold)
-    } else {
-      val sets = sh.groupBy(id).agg(collect_list("sh").as("set"), count(lit(1)).as("sz"))
-      cand
-        .join(sets.select(col(id).as("ia"), col("set").as("sa"), col("sz").as("na")), "ia")
-        .join(sets.select(col(id).as("ib"), col("set").as("sb"), col("sz").as("nb")), "ib")
-        // one intersection per candidate: a single-select formula would
-        // evaluate array_intersect twice per row (codegen subexpression
-        // elimination is not guaranteed across a projection's outputs)
-        .select(col("ia"), col("ib"), col("na"), col("nb"),
-          size(array_intersect(col("sa"), col("sb"))).cast("double").as("inter"))
-        .select(col("ia").as("id_a"), col("ib").as("id_b"),
-          (col("inter") / (col("na") + col("nb") - col("inter"))).as("jaccard"))
-        .filter(col("jaccard") >= threshold)
-    }
+      .join(sets.select(col(id).as("ia"), col(set).as("sa")).hint("shuffle_hash"), "ia")
+      .join(sets.select(col(id).as("ib"), col(set).as("sb")).hint("shuffle_hash"), "ib")
+    val sid = col("sid")
+    val (first, inter) =
+      if (bitmaps) {
+        // no common bit below sid: words before sid's word, then its low bits
+        val word = shiftright(sid, 6).cast("int")
+        val low = bitwise_not(call_function("shiftleft", lit(-1L), pmod(sid, lit(64L)).cast("int")))
+        (!exists(sequence(lit(0), word), i => col("sa")(i).bitwiseAND(col("sb")(i))
+          .bitwiseAND(when(i < word, lit(-1L)).otherwise(low)) =!= 0),
+          aggregate(zip_with(col("sa"), col("sb"), (x, y) => bit_count(x.bitwiseAND(y))),
+            lit(0), (acc, v) => acc + v))
+      } else
+        (!arrays_overlap(filter(col("sa"), x => x < sid), col("sb")),
+          size(array_intersect(col("sa"), col("sb"))))
+    val out = Lineage.cut(cand.filter(first)
+      .select(col("ia"), col("ib"), col("na"), col("nb"), inter.cast("double").as("inter"))
+      .select(col("ia").as("id_a"), col("ib").as("id_b"),
+        (col("inter") / (col("na") + col("nb") - col("inter"))).as("jaccard"))
+      .filter(col("jaccard") >= threshold))
+    Lineage.release(sets)
+    out
   }
 
   /** Universe cap for the bitmap verify path: 2^18 ids = 4 KiB/doc bitmap.
    * Vocabulary-limited corpora are exactly where candidate pruning is
    * weakest and candidate counts largest, and there the AND-popcount scan
-   * (≤ 4096 long words/pair) stays far cheaper than hashing string arrays
-   * — measured on the bench 10× leg: forcing the string path at a 20k
-   * universe made the verify 2-3× SLOWER despite the smaller per-pair
-   * footprint. The build side is the O(1)/row [[graft.functions.BitmapOr]]
+   * (≤ 4096 long words/pair) stays far cheaper than hashing arrays —
+   * measured on the bench 10× leg when the array path still held shingle
+   * strings: forcing it at a 20k universe made the verify 2-3× SLOWER
+   * despite the smaller per-pair footprint. The build side is the O(1)/row [[graft.functions.BitmapOr]]
    * aggregate, so the only width-proportional cost left is the per-pair
    * scan. The switch is execution-only: both paths produce identical
    * pairs. */
@@ -184,7 +200,7 @@ object Dedup {
     // several times (adjacency build, degrees), and re-running an expensive
     // candidate generator (PPJoin, LSH banding) per consumer is exactly the
     // recompute a 100 TB pipeline cannot afford
-    val edges = graft.core.Lineage.cut(
+    val edges = Lineage.cut(
       pairs.select(col("id_a").as("src"), col("id_b").as("dst")))
     val comp = graft.alg.ConnectedComponents.run(edges).components
     docs.select(col(id))

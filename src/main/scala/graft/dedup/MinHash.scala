@@ -2,7 +2,8 @@ package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import graft.core.Lineage
+import graft.functions.BitmapOr
 import graft.text.TextAnalysis
 
 /**
@@ -17,17 +18,19 @@ import graft.text.TextAnalysis
  *    oracle queries; slower, same statistics).
  *
  * Candidate pairs never come from a cross join: documents sharing a band
- * signature land in the same bucket, pairs are generated per bucket, then
- * verified by estimated Jaccard = fraction of equal minhash components.
+ * signature land in the same bucket, pairs are generated per bucket (each
+ * pair once, at its first kept band — see [[bandJoin]]), then verified by
+ * estimated Jaccard = fraction of equal minhash components.
  */
 object MinHash {
 
-  /** Distinct (id, sh) shingle rows with normalization hoisted into a
-   * projection (inside the shingle lambda it re-executes per element). */
+  /** (id, sh) rows, one per distinct shingle of a document, with
+   * normalization hoisted into a projection (inside the shingle lambda it
+   * re-executes per element). The dedup is per document (a narrow
+   * `array_distinct`); a min over repeats would be the same anyway. */
   private def shingleRows(docs: DataFrame, n: Int, id: String, text: String): DataFrame =
     docs.select(col(id), TextAnalysis.normalizeForShingles(col(text)).as("__t"))
-      .select(col(id), explode(TextAnalysis.rawShingles(col("__t"), n)).as("sh"))
-      .distinct()
+      .select(col(id), explode(array_distinct(TextAnalysis.rawShingles(col("__t"), n))).as("sh"))
 
   /** (id, sig: array<long>) — k numeric minhashes over char n-gram shingles. */
   def signatures(docs: DataFrame, k: Int = 128, n: Int = 5,
@@ -38,38 +41,25 @@ object MinHash {
       .select(col(id), array((0 until k).map(i => col(s"h$i")): _*).as("sig"))
   }
 
-  /** Candidate pairs from banding: b bands of r rows (k = b*r); pair emitted
-   * once if ANY band matches. Bucket size capped to avoid quadratic blowup
-   * on degenerate buckets (cap hits are counted upstream, not silent). */
+  /** Candidate pairs from banding: b bands of r rows (k = b*r); a pair is a
+   * candidate if ANY band puts both documents in one bucket of 2 to
+   * `maxBucket` documents (larger, degenerate buckets are dropped to avoid
+   * their quadratic pair count). One row per distinct pair: see
+   * [[bandJoin]] for the rule that makes it so without a `distinct`.
+   * Returned as an eager [[Lineage.cut]]; no other block outlives the call. */
   def candidatePairs(sigs: DataFrame, bands: Int, rows: Int,
-                     id: String = "doc_id", maxBucket: Int = 2000): DataFrame = {
-    val banded = sigs.select(col(id), posexplode(
-      array((0 until bands).map(b =>
-        xxhash64(concat_ws(",", (0 until rows).map(r => col("sig")(b * rows + r).cast("string")): _*))): _*))
-      .as(Seq("band", "bkey")))
-    val buckets = banded.groupBy("band", "bkey").agg(count(lit(1)).as("bn"))
-      .filter(col("bn") <= maxBucket && col("bn") > 1)
-    val inBucket = banded.join(buckets, Seq("band", "bkey"), "left_semi")
-    inBucket.select(col("band"), col("bkey"), col(id).as("id_a"))
-      .join(inBucket.select(col("band"), col("bkey"), col(id).as("id_b")), Seq("band", "bkey"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-  }
+                     id: String = "doc_id", maxBucket: Int = 2000): DataFrame =
+    bandJoin(Seq(sigs.withColumn("is_new", lit(true))), bands, rows, id, maxBucket)(
+      _.select("id_a", "id_b"))
 
-  /** End-to-end: near-dup pairs with estimated Jaccard ≥ threshold. */
+  /** End-to-end: near-dup pairs with estimated Jaccard ≥ threshold — the
+   * [[candidatePairs]] join plus the verify, as one eager [[Lineage.cut]]. */
   def nearDupPairs(docs: DataFrame, k: Int = 128, bands: Int = 32, n: Int = 5,
                    threshold: Double = 0.7,
                    id: String = "doc_id", text: String = "text"): DataFrame = {
     require(k % bands == 0, "k must be divisible by bands")
-    val rows = k / bands
-    val sigs = signatures(docs, k, n, id, text).persist(StorageLevel.MEMORY_AND_DISK)
-    val pairs = candidatePairs(sigs, bands, rows, id)
-    val withA = pairs.join(sigs.select(col(id).as("id_a"), col("sig").as("sig_a")), "id_a")
-    val withB = withA.join(sigs.select(col(id).as("id_b"), col("sig").as("sig_b")), "id_b")
-    withB.select(col("id_a"), col("id_b"),
-      (size(filter(zip_with(col("sig_a"), col("sig_b"), (a, b) => a === b),
-        x => x)).cast("double") / lit(k)).as("est_jaccard"))
-      .filter(col("est_jaccard") >= threshold)
+    bandJoin(Seq(signatures(docs, k, n, id, text).withColumn("is_new", lit(true))), bands,
+      k / bands, id, maxBucket = 2000)(verify(k, threshold))
   }
 
   /**
@@ -83,7 +73,8 @@ object MinHash {
    *
    * Pair orientation: id_a is always from the new batch; for new×new pairs
    * id_a < id_b (emitted once). Banding is complete (a pair with any equal
-   * band is a candidate) up to `maxBucket`, as in [[candidatePairs]].
+   * band is a candidate) up to `maxBucket`, through the same [[bandJoin]]
+   * as [[candidatePairs]]; the result is an eager [[Lineage.cut]].
    *
    * Pass `k` (the signature width both stores were signed with) whenever
    * the caller knows it — it always does in the production shape, since it
@@ -111,31 +102,82 @@ object MinHash {
       return newSigs.select(col(id).as("id_a"), col(id).as("id_b"),
         lit(0.0).as("est_jaccard")).limit(0)
     val rows = rowsOpt.get
-    val kk = bands * rows
-    val all = oldSigs.select(col(id), col("sig"), lit(false).as("is_new"))
-      .unionByName(newSigs.select(col(id), col("sig"), lit(true).as("is_new")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val banded = all.select(col(id), col("is_new"), posexplode(
-      array((0 until bands).map(b =>
-        xxhash64(concat_ws(",", (0 until rows).map(r =>
-          col("sig")(b * rows + r).cast("string")): _*))): _*))
-      .as(Seq("band", "bkey")))
+    bandJoin(Seq(oldSigs.select(col(id), col("sig"), lit(false).as("is_new")),
+        newSigs.select(col(id), col("sig"), lit(true).as("is_new"))),
+      bands, rows, id, maxBucket)(verify(bands * rows, threshold))
+  }
+
+  /** Estimated Jaccard (share of equal minhashes) of each pair, kept at
+   * ≥ `threshold`. */
+  private def verify(k: Int, threshold: Double)(pairs: DataFrame): DataFrame =
+    pairs.select(col("id_a"), col("id_b"),
+      (size(filter(zip_with(col("sig_a"), col("sig_b"), (a, b) => a === b),
+        x => x)).cast("double") / lit(k)).as("est_jaccard"))
+      .filter(col("est_jaccard") >= threshold)
+
+  /**
+   * The banding shared by every pair generator here. `stores` are (id,
+   * sig, is_new) tables, each cut on its own (a union of two signing plans
+   * would run both final aggregates in one task); pairs are probed from the
+   * new side only (id_a new; id_a < id_b when both are new), so with every
+   * row new this is the plain self-join.
+   * Each band's key is an xxhash64 of its `rows` minhashes; a bucket
+   * (band, key) is kept when it holds 2 to `maxBucket` documents.
+   *
+   * FIRST-KEPT-BAND rule: the bucket self-join meets a pair once per kept
+   * bucket the two documents share, and only the row of the LOWEST such
+   * band is kept — no `distinct` (whose partial and final aggregates cost
+   * a memory page each in the task that ran them). The rule is row-local:
+   * every document carries its band keys and a bitmask of its bands whose
+   * bucket was kept, and the row survives iff no earlier band has equal
+   * keys with its bit set. Equal keys mean one bucket, so the two
+   * documents' bits agree there. This stays exact when the cap drops an
+   * earlier band's bucket: that band's bit is clear, and the pair is kept
+   * at the first band whose bucket survived.
+   *
+   * `finish` maps the kept rows (id_a, id_b, band, sig_a, sig_b) to the
+   * result, which is returned as an eager [[Lineage.cut]]; every
+   * intermediate is built once (both join sides read one in-bucket table)
+   * and released before returning. Every aggregate and join build runs in
+   * a stage of its own (the joins are shuffled hash joins), so a task holds
+   * at most one memory-managed operator.
+   */
+  private def bandJoin(stores: Seq[DataFrame], bands: Int, rows: Int, id: String,
+                       maxBucket: Int)(finish: DataFrame => DataFrame): DataFrame = {
+    val keys = array((0 until bands).map(b =>
+      xxhash64(concat_ws(",", (0 until rows).map(r =>
+        col("sig")(b * rows + r).cast("string")): _*))): _*).as("keys")
+    val parts = stores.map(s => Lineage.cut(s.select(col(id), col("sig"), col("is_new"), keys)))
+    val keyed = parts.reduce(_ unionByName _)
+    val banded = keyed.select(col(id), col("is_new"), posexplode(col("keys")).as(Seq("band", "bkey")))
     val buckets = banded.groupBy("band", "bkey").agg(count(lit(1)).as("bn"))
       .filter(col("bn") <= maxBucket && col("bn") > 1)
-    val inBucket = banded.join(buckets, Seq("band", "bkey"), "left_semi")
-    // probe from the new side only: old×old never meets
-    val cand = inBucket.filter(col("is_new"))
-      .select(col("band"), col("bkey"), col(id).as("id_a"))
-      .join(inBucket.select(col("band"), col("bkey"), col(id).as("id_b"),
-        col("is_new").as("__bn")), Seq("band", "bkey"))
-      .filter(col("id_a") =!= col("id_b") && (!col("__bn") || col("id_a") < col("id_b")))
-      .select("id_a", "id_b").distinct()
-    val withA = cand.join(all.select(col(id).as("id_a"), col("sig").as("sig_a")), "id_a")
-    val withB = withA.join(all.select(col(id).as("id_b"), col("sig").as("sig_b")), "id_b")
-    withB.select(col("id_a"), col("id_b"),
-      (size(filter(zip_with(col("sig_a"), col("sig_b"), (a, b) => a === b),
-        x => x)).cast("double") / lit(kk)).as("est_jaccard"))
-      .filter(col("est_jaccard") >= threshold)
+    val inBucket = Lineage.cut(
+      banded.join(buckets.hint("shuffle_hash"), Seq("band", "bkey"), "left_semi"))
+    val kept = inBucket.groupBy(id)
+      .agg(BitmapOr.agg(col("band").cast("long"), (bands + 63) / 64).as("kept"))
+    val perDoc = Lineage.cut(keyed.join(kept.hint("shuffle_hash"), id)
+      .select(col(id), col("sig"), col("keys"), col("kept")))
+    parts.foreach(Lineage.release)
+    val band = col("band")
+    def keptAt(i: Column): Column =
+      call_function("shiftright", col("kept")(shiftright(i, 6)), pmod(i, lit(64)))
+        .bitwiseAND(lit(1L)) === 1
+    val joined = inBucket.filter(col("is_new"))
+      .select(band, col("bkey"), col(id).as("id_a"))
+      .join(inBucket.select(band, col("bkey"), col(id).as("id_b"), col("is_new").as("new_b"))
+        .hint("shuffle_hash"), Seq("band", "bkey"))
+      .filter(col("id_a") =!= col("id_b") && (!col("new_b") || col("id_a") < col("id_b")))
+      .join(perDoc.select(col(id).as("id_a"), col("sig").as("sig_a"), col("keys").as("keys_a"),
+        col("kept")).hint("shuffle_hash"), "id_a")
+      .join(perDoc.select(col(id).as("id_b"), col("sig").as("sig_b"), col("keys").as("keys_b"))
+        .hint("shuffle_hash"), "id_b")
+      .filter(band === 0 || !exists(sequence(lit(0), band - 1),
+        i => col("keys_a")(i) === col("keys_b")(i) && keptAt(i)))
+    val out = Lineage.cut(finish(joined))
+    Lineage.release(inBucket)
+    Lineage.release(perDoc)
+    out
   }
 
   /** k/bands from a one-row probe (both stores must agree on k);

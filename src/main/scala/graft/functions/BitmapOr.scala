@@ -13,7 +13,8 @@ import org.apache.spark.sql.types._
 /**
  * Fixed-width set bitmap from dense element ids: OR of `1L << (sid % 64)`
  * into word `sid / 64` over a `width`-long buffer — the build side of the
- * PPJoin bitmap verify ([[graft.dedup.Dedup.ngramJaccardPairs]]).
+ * PPJoin bitmap verify ([[graft.dedup.Dedup.ngramJaccardPairs]]) and of
+ * each document's kept-band mask in [[graft.dedup.MinHash]]'s banding.
  *
  * Why a custom Catalyst aggregate (the TopKStructs/RegisterMax precedent):
  * the declarative form — `collect_list` all ids, then an `aggregate` fold

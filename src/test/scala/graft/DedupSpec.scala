@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
+import graft.core.Lineage
 import graft.dedup.{Dedup, MinHash, SimHash}
 
 class DedupSpec extends SparkSpec {
@@ -184,5 +187,133 @@ class DedupSpec extends SparkSpec {
     val out = MinHash.incrementalNearDupPairs(none, none, bands = 4, threshold = 0.5)
     assert(out.columns.toSeq == Seq("id_a", "id_b", "est_jaccard"))
     assert(out.count() == 0)
+  }
+
+  private def real = spark.read.parquet(s"${PlanShapeSpec.Sf}/documents.parquet")
+
+  test("ngram jaccard with a binding maxShingleFreq equals a replay of the capped prefix rule") {
+    // replay in plain Scala: distinct 5-gram sets, global (f, sh) order with
+    // Spark's byte-wise string order, prefix = the |s| - ceil(t|s|) + 1
+    // first shingles, prefix shingles above the cap dropped, then the
+    // length and positional filters and the exact Jaccard
+    val (t, cap) = (0.4, 8)
+    val sets = real.select(col("doc_id"),
+        explode(array_distinct(graft.text.TextAnalysis.shingles(col("text"), 5))).as("sh"))
+      .collect().groupBy(_.getLong(0))
+      .map { case (k, v) => k -> v.map(_.getString(1)).toSet }
+    val freq = sets.values.toSeq.flatten.groupBy(identity).map { case (k, v) => k -> v.size }
+    def before(a: String, b: String): Boolean =
+      if (freq(a) != freq(b)) freq(a) < freq(b)
+      else UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0
+    def replay(cap: Int): Map[(Long, Long), Double] = {
+      val prefix = sets.map { case (d, s) =>
+        val p = s.size - math.ceil(t * s.size).toInt + 1
+        d -> s.toSeq.sortWith(before).take(p).zipWithIndex
+          .collect { case (x, i) if freq(x) <= cap => x -> (i + 1) }.toMap
+      }
+      val alpha = t / (1.0 + t)
+      val ids = sets.keys.toSeq.sorted
+      (for {
+        i <- ids.indices; j <- (i + 1) until ids.size
+        (a, b) = (ids(i), ids(j)); (na, nb) = (sets(a).size, sets(b).size)
+        if math.min(na, nb) + 1e-9 >= t * math.max(na, nb)
+        if (prefix(a).keySet & prefix(b).keySet).exists(x =>
+          1 + math.min(na - prefix(a)(x), nb - prefix(b)(x)) + 1e-9 >= alpha * (na + nb))
+        inter = (sets(a) & sets(b)).size
+        jac = inter.toDouble / (na + nb - inter) if jac >= t
+      } yield (a, b) -> jac).toMap
+    }
+    val want = replay(cap)
+    assert(want.size < replay(Int.MaxValue).size, "the cap must drop pairs here")
+    for (universe <- Seq(Dedup.BitmapMaxUniverse, 0L)) {
+      val out = Dedup.ngramJaccardPairs(real, n = 5, threshold = t, maxShingleFreq = cap,
+        bitmapMaxUniverse = universe)
+      val got = out.collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2)))
+      assert(got.map(_._1).distinct.length == got.length, "one row per pair")
+      assert(got.toMap == want, s"bitmapMaxUniverse $universe")
+      Lineage.release(out)
+    }
+  }
+
+  /** Replay of capped banding in plain Scala: the pairs sharing some band
+   * whose bucket holds 2 to `maxBucket` documents. */
+  private def bandedReplay(sigs: Map[Long, Seq[Any]], bands: Int, rows: Int,
+                           maxBucket: Int): Set[(Long, Long)] =
+    (0 until bands).flatMap { b =>
+      sigs.groupBy(_._2.slice(b * rows, (b + 1) * rows)).values
+        .filter(g => g.size > 1 && g.size <= maxBucket)
+        .flatMap(g => for (x <- g.keys; y <- g.keys if x < y) yield (x, y))
+    }.toSet
+
+  test("banding stays exact when the cap drops an earlier band: pair found through a later band") {
+    // 60 signatures over a 3-value alphabet, 6 bands of 2: ~7 documents per
+    // bucket, so maxBucket = 7 drops some buckets while pairs share several
+    val rnd = new scala.util.Random(7)
+    val (bands, rows, cap) = (6, 2, 7)
+    val sigs = (0L until 60L).map(d => d -> Seq.fill(bands * rows)(rnd.nextInt(3).toLong)).toMap
+    val sigDf = {
+      val s = spark; import s.implicits._
+      sigs.toSeq.toDF("doc_id", "sig")
+    }
+    val want = bandedReplay(sigs, bands, rows, cap)
+    def firstShared(a: Long, b: Long): Int =
+      (0 until bands).find(i => (i * rows until (i + 1) * rows).forall(j => sigs(a)(j) == sigs(b)(j))).get
+    val viaLaterBand = want.filter { case (a, b) =>
+      val f = firstShared(a, b)
+      sigs.count(_._2.slice(f * rows, (f + 1) * rows) == sigs(a).slice(f * rows, (f + 1) * rows)) > cap
+    }
+    assert(viaLaterBand.nonEmpty, "some pair's first shared band must be capped")
+    val cand = MinHash.candidatePairs(sigDf, bands, rows, maxBucket = cap)
+    val got = cand.collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(got.distinct.length == got.length, "one row per pair")
+    assert(got.toSet == want)
+    Lineage.release(cand)
+    // the incremental path shares the banding: new = even ids, every
+    // candidate kept (threshold 0), estimate = share of equal minhashes
+    val isNew = col("doc_id") % 2 === 0
+    val inc = MinHash.incrementalNearDupPairs(sigDf.filter(!isNew), sigDf.filter(isNew),
+      bands, threshold = 0.0, maxBucket = cap, k = bands * rows)
+    val incGot = inc.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    val incWant = want.toSeq.flatMap { case (x, y) =>
+      val est = sigs(x).zip(sigs(y)).count { case (u, v) => u == v }.toDouble / (bands * rows)
+      if (x % 2 == 0) Some((x, y, est)) else if (y % 2 == 0) Some((y, x, est)) else None
+    }
+    assert(incGot.length == incGot.distinct.length)
+    assert(incGot.toSet == incWant.toSet)
+    Lineage.release(inc)
+  }
+
+  test("candidatePairs on the documents table: one row per distinct pair, equal to the replay") {
+    val sigs = MinHash.signatures(real, k = 128, n = 5)
+    val want = bandedReplay(sigs.collect().map(r => r.getLong(0) -> r.getSeq[Any](1)).toMap,
+      32, 4, 2000)
+    val cand = MinHash.candidatePairs(sigs, bands = 32, rows = 4)
+    val got = cand.collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(got.length == got.distinct.length, "a pair meeting in several bands is emitted once")
+    assert(got.toSet == want)
+    Lineage.release(cand)
+  }
+
+  test("pair generators return one cut and release every intermediate") {
+    val sc = spark.sparkContext
+    def owns(what: String)(call: => DataFrame): Unit = {
+      val before = sc.getPersistentRDDs.keySet
+      val out = call
+      // RDDs released by earlier suites may leave meanwhile: count new ones
+      val added = sc.getPersistentRDDs.keySet -- before
+      assert(Lineage.isCut(out), s"$what returns a cut")
+      assert(added.size == 1, s"$what leaves its result only, found ${added.size} new RDDs")
+      Lineage.release(out)
+    }
+    owns("ngramJaccardPairs")(Dedup.ngramJaccardPairs(real, n = 5, threshold = 0.5))
+    owns("ngramJaccardPairs (id arrays)")(
+      Dedup.ngramJaccardPairs(real, n = 5, threshold = 0.5, bitmapMaxUniverse = 0))
+    owns("nearDupPairs")(MinHash.nearDupPairs(real, k = 128, bands = 32))
+    owns("candidatePairs")(MinHash.candidatePairs(MinHash.signatures(real), bands = 32, rows = 4))
+    val isNew = col("doc_id") % 5 === 0
+    owns("incrementalNearDupPairs")(MinHash.incrementalNearDupPairs(
+      MinHash.md5Signatures(real.filter(!isNew), k = 8, n = 5),
+      MinHash.md5Signatures(real.filter(isNew), k = 8, n = 5),
+      bands = 4, threshold = 0.5, k = 8))
   }
 }

@@ -170,4 +170,14 @@ class PipelineSpec extends SparkSpec {
     assert(fast == slow)
     assert(fast.nonEmpty && fast.groupBy(_._1).forall(_._2.size <= 3))
   }
+
+  test("entry: the edge cut is released once PageRank has run") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val top = SparkEntry.entry(spark)
+    // RDDs released by earlier suites may leave meanwhile: count only new ones
+    val added = sc.getPersistentRDDs.keySet -- before
+    assert(added.size == 1, "only PageRank's final state, which the result reads, stays")
+    assert(top.count() == 20)
+  }
 }

@@ -8,9 +8,10 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
 import org.apache.spark.sql.execution.{ExpandExec, FileSourceScanExec, FormattedMode,
   GenerateExec, QueryExecution, SortExec, SparkPlan, TakeOrderedAndProjectExec}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, QueryStageExec}
-import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, ObjectHashAggregateExec,
-  SortAggregateExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper,
+  QueryStageExec, ResultQueryStageExec}
+import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, HashAggregateExec,
+  ObjectHashAggregateExec, SortAggregateExec}
 import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeLike}
 import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec,
   BroadcastNestedLoopJoinExec, CartesianProductExec, ShuffledHashJoinExec, SortMergeJoinExec}
@@ -169,21 +170,8 @@ class PlanShapeSpec extends SparkSpec {
     Case("RandomWalk.contextPairs: one walk-keyed exchange, no walk² join",
       () => plan(RandomWalk.contextPairs(walked, window = 2)),
       Shape(exactly(1), also = Seq(joins(0)))),
-    Case("Dedup.ngramJaccardPairs(0.5): 11 exchanges",
-      () => plan(Dedup.ngramJaccardPairs(docs, n = 5, threshold = 0.5)), Shape(exactly(11))),
     Case("Dedup.dedupSubstrings: 3 exchanges, census combined map-side",
       () => plan(Dedup.dedupSubstrings(docs)), Shape(exactly(3), also = Seq(outboxCombine))),
-    Case("MinHash.nearDupPairs(128, 32): 3 exchanges",
-      () => plan(MinHash.nearDupPairs(docs, k = 128, bands = 32)), Shape(exactly(3))),
-    Case("MinHash.incrementalNearDupPairs: 3 exchanges",
-      () => plan {
-        val isNew = col("doc_id") % 5 === 0
-        MinHash.incrementalNearDupPairs(
-          MinHash.md5Signatures(docs.filter(!isNew), k = 8, n = 5),
-          MinHash.md5Signatures(docs.filter(isNew), k = 8, n = 5),
-          bands = 4, threshold = 0.5)
-      },
-      Shape(exactly(3))),
     Case("Curation.packSequences: 1 exchange",
       () => plan(Curation.packSequences(docs, col("doc_id"), length(col("text")) / 5,
         capTokens = 512, buckets = 8)),
@@ -289,6 +277,37 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
+  // whole-call cases for the dedup pair generators: each call cuts its
+  // intermediates and its result, so the claims are about every plan one
+  // call plus a noop write of its result executes
+  private def pairCall(name: String, maxExchanges: Int, also: Check*)(call: => DataFrame): Unit =
+    test(name) {
+      val plans = executed(call.write.format("noop").mode("overwrite").save()).map(_._2)
+      val shape = Shape(atMost(maxExchanges),
+        also = Seq(noPairAggregate, onePagePerStage, no[SortMergeJoinExec]) ++ also)
+      val problems = plans.zipWithIndex.flatMap { case (qe, i) =>
+        violations(qe.executedPlan, shape).map(v => s"plan ${i + 1} of ${plans.size}: $v")
+      }
+      assert(problems.isEmpty, problems.mkString("\n"))
+    }
+
+  pairCall("Dedup.ngramJaccardPairs(0.5): <= 4 exchanges per plan, no pair-keyed aggregate, " +
+      "no per-document window, one sort or aggregate per stage", 4, noDocWindow) {
+    Dedup.ngramJaccardPairs(docs, n = 5, threshold = 0.5)
+  }
+  pairCall("MinHash.nearDupPairs(128, 32): <= 6 exchanges per plan, no pair-keyed aggregate, " +
+      "one sort or aggregate per stage", 6) {
+    MinHash.nearDupPairs(docs, k = 128, bands = 32)
+  }
+  pairCall("MinHash.incrementalNearDupPairs: <= 6 exchanges per plan, no pair-keyed aggregate, " +
+      "one sort or aggregate per stage", 6) {
+    val isNew = col("doc_id") % 5 === 0
+    MinHash.incrementalNearDupPairs(
+      MinHash.md5Signatures(docs.filter(!isNew), k = 8, n = 5),
+      MinHash.md5Signatures(docs.filter(isNew), k = 8, n = 5),
+      bands = 4, threshold = 0.5, k = 8)
+  }
+
   cases.foreach { c =>
     test(c.name) {
       val plans = c.plans()
@@ -334,8 +353,12 @@ object PlanShapeSpec extends AdaptiveSparkPlanHelper {
   val hashJoinsOnly: Check = Check("only shuffled hash joins",
     p => nodes[BaseJoinExec](p).forall(_.isInstanceOf[ShuffledHashJoinExec]))
 
-  /** The nodes an exchange reads within its own stage. */
-  private def stageBelow(p: SparkPlan): Seq[SparkPlan] = p.children.flatMap {
+  /** The nodes an exchange (or a stage's root) reads within its own stage;
+   * an adaptive plan's result stage runs in its caller's stage. */
+  private def stageBelow(p: SparkPlan): Seq[SparkPlan] = p.children.flatMap(sameStage)
+  private def sameStage(n: SparkPlan): Seq[SparkPlan] = n match {
+    case a: AdaptiveSparkPlanExec => sameStage(a.executedPlan)
+    case r: ResultQueryStageExec => sameStage(r.plan)
     case _: Exchange | _: QueryStageExec => Nil
     case n => n +: stageBelow(n)
   }
@@ -347,6 +370,28 @@ object PlanShapeSpec extends AdaptiveSparkPlanHelper {
       case a: BaseAggregateExec => a.aggregateExpressions.exists(_.mode == Partial)
       case _ => false
     }))
+
+  /** No aggregate is keyed on both ids of a candidate pair: the pair
+   * generators emit each pair once by a row-local rule, not a `distinct`. */
+  val noPairAggregate: Check = Check("no aggregate keyed on a candidate pair", p =>
+    nodes[BaseAggregateExec](p).forall { a =>
+      val keys = a.groupingExpressions.flatMap(_.references.map(_.name)).toSet
+      !(keys("ia") && keys("ib")) && !(keys("id_a") && keys("id_b"))
+    })
+
+  /** No window partitioned by the document id (a per-document rank). */
+  val noDocWindow: Check = Check("no window partitioned by doc_id", p =>
+    collect(p) { case w: WindowExec => w }
+      .forall(!_.partitionSpec.exists(_.references.exists(_.name == "doc_id"))))
+
+  /** At most one memory-managed operator (a sort or a hash aggregate, each
+   * holding at least one memory page per task) in any stage: the stage
+   * under the root and under every exchange. */
+  val onePagePerStage: Check = Check("at most one sort or hash aggregate per stage", p =>
+    (sameStage(p) +: nodes[Exchange](p).map(stageBelow)).forall(_.count {
+      case _: SortExec | _: HashAggregateExec | _: ObjectHashAggregateExec => true
+      case _ => false
+    } <= 1))
 
   def scanReads(cols: String*): Check = Check(s"a scan reading exactly ${cols.mkString(", ")}",
     p => nodes[FileSourceScanExec](p).exists(_.requiredSchema.fieldNames.toSet == cols.toSet))
