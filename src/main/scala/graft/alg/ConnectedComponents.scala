@@ -145,7 +145,8 @@ object ConnectedComponents {
     }
     val outcome = Superstep.run(init,
       Superstep.Config(maxSupersteps = maxSupersteps, checkpointDir = checkpointDir,
-        resume = resume)) { (state, _) =>
+        resume = resume, fingerprint = s"wcc denseThreshold=$denseThreshold " +
+          s"pointerJump=$pointerJump V=$totalV E=$totalEdges")) { (state, _) =>
       val (frontEdges, deltaCount) = carried.getOrElse(frontierStats(state))
       val dense = deltaCount > denseThreshold * totalV
       val trv = if (dense) totalEdges else frontEdges

@@ -93,7 +93,9 @@ object PageRank {
 
     val outcome = Superstep.run(init,
       Superstep.Config(maxSupersteps = rounds, checkpointDir = checkpointDir,
-        resume = resume)) { (state, superstep) =>
+        resume = resume,
+        fingerprint = s"pagerank rounds=$rounds damping=$damping V=$v E=$e")) {
+        (state, superstep) =>
       // shuffle-hash hint: the state side (O(V)) is hash-built per partition
       // against the pre-partitioned adjacency — no driver-side broadcast
       // build (unscalable at 10^12 vertices) and no per-superstep sort

@@ -18,7 +18,8 @@ import org.apache.spark.storage.StorageLevel
  * "BigInteger would overflow supported range" (see GraftSql docs).
  *
  * Every iterative driver in this engine MUST cut lineage through this
- * helper (or write a parquet checkpoint) once per superstep.
+ * helper once per superstep ([[Superstep]] cuts each state, and writes a
+ * checkpoint from that cut, not in place of it).
  *
  * The blocks behind a cut frame live in the block manager only (a local
  * checkpoint has no recompute path), and the rebuilt DataFrame is not

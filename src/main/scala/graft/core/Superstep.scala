@@ -1,11 +1,12 @@
 package graft.core
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.graftinternal.GraftSql
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 import scala.util.Try
 
 /** One superstep's ledger row — the analog of Totem's per-phase timers
@@ -29,24 +30,32 @@ final case class StepResult(state: DataFrame, edgesTraversed: Long, converged: B
  * BSP driver loop — the Spark-native `engine_execute`
  * (`/root/reference/src/totem/totem_engine.cu:214-234`). Each superstep is
  * one Spark job: join/aggregate/update, then a lineage barrier. The barrier
- * (persist-and-materialize or checkpoint-to-parquet) replaces Totem's
+ * ([[Lineage.cut]]: materialize, cache, truncate the plan) replaces Totem's
  * `grooves_synchronize` and is MANDATORY for plan-growth control: a
  * 25-iteration loop of joins would otherwise blow up the optimizer.
  *
  * As in Totem, the loop owns its policy: an algorithm supplies only the step.
- * With a `checkpointDir`, every superstep writes its state table to
- * `superstep=N/data` plus a `superstep=N/manifest.json` with the fields
- * `superstep`, `status` ("complete"), `wall_ms`, `state_rows`,
- * `edges_traversed`, `gteps`, `converged`, `lineage` (`parent`: superstep
- * N-1's data path or null, `data`) and `partitions` (`partition`, `rows` per
- * Spark partition). A crashed run resumes from the last complete superstep.
+ * The working state is the in-memory cut in both modes. With a
+ * `checkpointDir`, every superstep also writes that cut to
+ * `superstep=N/data` — the durable copy a resume reads, not the next
+ * superstep's input — plus a `superstep=N/manifest.json` with the fields
+ * `superstep`, `status` ("complete"), `fingerprint` ([[Config.fingerprint]]),
+ * `wall_ms`, `state_rows`, `edges_traversed`, `gteps`, `converged`,
+ * `lineage` (`parent`: superstep N-1's data path or null, `data`) and
+ * `partitions` (`partition`, `rows` for each partition of the state, counted
+ * by the write's own tasks). A crashed run resumes from the last complete
+ * superstep whose fingerprint matches.
  */
 object Superstep {
 
+  /** @param fingerprint what the checkpointed state was computed from (the
+   *  algorithm, its parameters, the input's identity): written into every
+   *  manifest, and a resume refuses a checkpoint whose fingerprint differs. */
   final case class Config(
       maxSupersteps: Int = 100,
       checkpointDir: Option[String] = None,
-      resume: Boolean = false)
+      resume: Boolean = false,
+      fingerprint: String = "")
 
   final case class Outcome(state: DataFrame, metrics: Seq[StepMetrics]) {
     def supersteps: Int = metrics.size
@@ -65,6 +74,10 @@ object Superstep {
       case Some(dir) if cfg.resume =>
         latestComplete(dir) match {
           case Some((ss, path)) =>
+            val found = readManifest(dir, ss).fold("")(_.path("fingerprint").asText())
+            if (found != cfg.fingerprint)
+              throw new IllegalStateException(s"cannot resume from $dir superstep=$ss: " +
+                s"it was written for fingerprint '$found', this run's is '${cfg.fingerprint}'")
             metrics ++= readLedger(dir, ss)
             (graft.sources.TableIO.read(spark, path), ss + 1)
           case None => (materialize(initial), 1)
@@ -77,31 +90,20 @@ object Superstep {
     while (!done && superstep <= cfg.maxSupersteps) {
       val t0 = System.nanoTime()
       val res = step(state, superstep)
-      val (newState, perPart) = cfg.checkpointDir match {
-        case Some(dir) =>
-          val (reread, pp) = writeCheckpoint(res.state, dir, superstep)
-          // a step that cut its own state leaves checkpoint blocks behind;
-          // the parquet copy supersedes them
-          if (res.state ne state) Lineage.release(res.state)
-          (reread, Some(pp))
-        case None =>
-          // steps that probe convergence materialize (Lineage.cut) their own
-          // state first — don't execute the step plan a second time here.
-          // The row count is ledger-only: in memory it would cost an extra
-          // job per superstep, so only checkpointed runs record it.
-          (if (Lineage.isCut(res.state)) res.state else materialize(res.state), None)
-      }
+      // steps that probe convergence cut their own state first — don't
+      // execute the step plan a second time here
+      val newState = if (Lineage.isCut(res.state)) res.state else materialize(res.state)
+      // the row count is ledger-only: the checkpoint write counts it for
+      // free, while in memory it would cost an extra job per superstep
+      val perPart = cfg.checkpointDir.map(writeCheckpoint(newState, _, superstep))
       val wallMs = (System.nanoTime() - t0) / 1000000
       val rows = perPart.fold(-1L)(_.values.sum)
       val m = StepMetrics(superstep, wallMs, rows, res.edgesTraversed, res.converged)
       metrics += m
-      for (dir <- cfg.checkpointDir; pp <- perPart) writeManifest(dir, m, pp)
-      // free the previous superstep's cache (unpersist covers cache-manager
-      // entries from parquet re-reads; release covers localCheckpoint blocks)
-      if (state ne newState) {
-        state.unpersist(blocking = false)
-        Lineage.release(state)
-      }
+      for (dir <- cfg.checkpointDir; pp <- perPart) writeManifest(dir, m, pp, cfg.fingerprint)
+      // free the previous superstep's blocks (a no-op for a resumed state,
+      // which is a plain table read)
+      if (state ne newState) Lineage.release(state)
       state = newState
       done = res.converged
       superstep += 1
@@ -118,16 +120,24 @@ object Superstep {
   private def manifestPath(dir: String, superstep: Int): Path =
     Paths.get(s"$dir/superstep=$superstep/manifest.json")
 
-  /** Write the state table, re-read it cached, and count its rows per
-   * partition (the manifest's partition lineage). */
-  private def writeCheckpoint(df: DataFrame, dir: String,
-                              superstep: Int): (DataFrame, Map[Int, Long]) = {
-    val path = dataPath(dir, superstep)
-    graft.sources.TableIO.write(df, path)
-    val re = graft.sources.TableIO.read(df.sparkSession, path).persist(StorageLevel.MEMORY_AND_DISK)
-    val perPart = re.groupBy(spark_partition_id().as("pid")).count()
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    (re, perPart)
+  /** Write the cut state `df` to superstep `superstep`'s data path — one
+   * narrow job over its cached blocks — and return its row count per
+   * partition (the manifest's partition lineage), counted by the write's own
+   * tasks so that no other job runs and any table format works. */
+  private def writeCheckpoint(df: DataFrame, dir: String, superstep: Int): Map[Int, Long] = {
+    // (partition, rows) per task; a retried task repeats its pair, which
+    // the toMap below collapses
+    val rows = df.sparkSession.sparkContext.collectionAccumulator[(Int, Long)]
+    val counted = df.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
+      var n = 0L
+      new Iterator[InternalRow] {
+        def hasNext: Boolean = it.hasNext || { rows.add(pid -> n); false }
+        def next(): InternalRow = { n += 1; it.next() }
+      }
+    }
+    graft.sources.TableIO.write(
+      GraftSql.fromInternalRdd(df.sparkSession, counted, df.schema), dataPath(dir, superstep))
+    rows.value.asScala.toMap
   }
 
   /** The manifest codec: every `manifest.json` is written and read here. */
@@ -135,10 +145,12 @@ object Superstep {
 
   /** Write the manifest to a temp file and rename it into place, so a crash
    * mid-write never leaves a partial manifest behind as a resume point. */
-  private def writeManifest(dir: String, m: StepMetrics, perPart: Map[Int, Long]): Unit = {
+  private def writeManifest(dir: String, m: StepMetrics, perPart: Map[Int, Long],
+                            fingerprint: String): Unit = {
     val root = json.createObjectNode()
       .put("superstep", m.superstep)
       .put("status", "complete")
+      .put("fingerprint", fingerprint)
       .put("wall_ms", m.wallMs)
       .put("state_rows", m.stateRows)
       .put("edges_traversed", m.edgesTraversed)
@@ -168,7 +180,6 @@ object Superstep {
   def latestComplete(dir: String): Option[(Int, String)] = {
     val root = Paths.get(dir)
     if (!Files.exists(root)) return None
-    import scala.jdk.CollectionConverters._
     // Files.list holds an open directory stream — close it or leak an fd
     // per resume probe
     val listing = Files.list(root)

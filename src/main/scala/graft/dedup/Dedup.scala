@@ -196,12 +196,11 @@ object Dedup {
    */
   def nearDupClusters(docs: DataFrame, pairs: DataFrame,
                       id: String = "doc_id"): DataFrame = {
-    // materialize the candidate pairs ONCE: the WCC consumes its edge table
-    // several times (adjacency build, degrees), and re-running an expensive
-    // candidate generator (PPJoin, LSH banding) per consumer is exactly the
-    // recompute a 100 TB pipeline cannot afford
-    val edges = Lineage.cut(
-      pairs.select(col("id_a").as("src"), col("id_b").as("dst")))
+    // no cut here: the WCC reads its edge table in one job, into its own
+    // cut of the symmetrized pairs, and releases that cut when it returns.
+    // Both directions scan `pairs`, which is cheap for what the generators
+    // here return (a cut) and for a stored table.
+    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
     val comp = graft.alg.ConnectedComponents.run(edges).components
     docs.select(col(id))
       .join(comp.select(col("vid").as(id), col("component")), Seq(id), "left")

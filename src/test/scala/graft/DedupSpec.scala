@@ -115,6 +115,19 @@ class DedupSpec extends SparkSpec {
     assert(rows(0L)._2 && !rows(1L)._2 && !rows(2L)._2 && !rows(4L)._2)
   }
 
+  test("nearDupClusters leaves one persisted RDD: the WCC state its result reads") {
+    val sc = spark.sparkContext
+    val pairs = Dedup.ngramJaccardPairs(real, n = 5, threshold = 0.5)
+    val before = sc.getPersistentRDDs.keySet
+    val clusters = Dedup.nearDupClusters(real, pairs)
+    // RDDs released by earlier suites may leave meanwhile: count new ones
+    val added = sc.getPersistentRDDs.keySet -- before
+    assert(added.size == 1, s"nearDupClusters left ${added.size} new RDDs")
+    // the one that stays is what the result reads: it still evaluates
+    assert(clusters.count() == real.count())
+    Lineage.release(pairs)
+  }
+
   test("dedupFuzzy keeps one representative per near-dup cluster") {
     // at threshold 0.5 docs 0/1/2/4 are mutual near-dups (q_ngram_jaccard
     // config); 3 and 5 are unrelated -> 3 survivors, min ids

@@ -5,7 +5,9 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import graft.core.{Superstep, StepResult}
 import graft.gen.GraphGen
-import graft.alg.ConnectedComponents
+import graft.alg.{ConnectedComponents, PageRank}
+import org.apache.spark.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 class SuperstepSpec extends SparkSpec {
   import spark.implicits._
@@ -193,11 +195,33 @@ class SuperstepSpec extends SparkSpec {
       s"step plan ran ${acc.value} row-evals; expected 300 = rows × supersteps (single execution)")
   }
 
-  test("superstep loop releases previous states' checkpoint blocks") {
+  test("checkpointed: the step plan executes exactly once per superstep") {
+    // the checkpoint write reads the state's cut — the step's own cut, or
+    // the one the loop takes of an uncut step — never the step plan
+    Seq(true, false).foreach { cutInStep =>
+      val acc = spark.sparkContext.longAccumulator(s"rowEvals-$cutInStep")
+      val touch = udf((x: Long) => { acc.add(1); x })
+      val out = Superstep.run(spark.range(100).select(col("id").as("vid"), lit(0L).as("x")),
+        Superstep.Config(maxSupersteps = 3, checkpointDir = Some(tmpDir("probeckpt")))) {
+        (state, ss) =>
+          val next = state.select(col("vid"), touch(col("x") + 1).as("x"))
+          if (cutInStep) {
+            val cut = graft.core.Lineage.cut(next)
+            val anyNegative = !cut.filter(col("x") < 0).isEmpty // convergence-style probe
+            StepResult(cut, 0L, converged = anyNegative || ss == 3)
+          } else StepResult(next, 0L, converged = ss == 3)
+      }
+      assert(graft.core.Lineage.isCut(out.state), s"cutInStep=$cutInStep")
+      assert(acc.value == 300, s"cutInStep=$cutInStep: step plan ran ${acc.value} " +
+        "row-evals; expected 300 = rows × supersteps (single execution)")
+      assert(out.metrics.map(_.stateRows) == Seq(100L, 100L, 100L))
+    }
+  }
+
+  private def releasesBlocks(cfg: Superstep.Config): Unit = {
     val before = spark.sparkContext.getPersistentRDDs.size
     val out = Superstep.run(
-      spark.range(50).select(col("id").as("vid"), lit(0L).as("x")),
-      Superstep.Config(maxSupersteps = 10)) { (state, ss) =>
+      spark.range(50).select(col("id").as("vid"), lit(0L).as("x")), cfg) { (state, ss) =>
       StepResult(state.withColumn("x", col("x") + 1), 0L, converged = ss == 10)
     }
     assert(out.state.count() == 50)
@@ -205,6 +229,66 @@ class SuperstepSpec extends SparkSpec {
     // 10 intermediate states were cut; without Lineage.release they all
     // linger in the block manager until ContextCleaner GC
     assert(after - before <= 2, s"persistent RDDs grew $before -> $after")
+  }
+
+  test("superstep loop releases previous states' checkpoint blocks") {
+    releasesBlocks(Superstep.Config(maxSupersteps = 10))
+  }
+
+  test("checkpointed superstep loop releases previous states' blocks") {
+    releasesBlocks(Superstep.Config(maxSupersteps = 10, checkpointDir = Some(tmpDir("release"))))
+  }
+
+  test("a checkpointed superstep runs at most one more Spark job than an in-memory one") {
+    val edges = GraphGen.rmat(spark, 8, 8, seed = 5).cache()
+    edges.count()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    def jobsOf(run: => PageRank.Result): (Int, Int) = {
+      ListenerDrain(spark.sparkContext)
+      jobs.set(0)
+      val res = run
+      ListenerDrain(spark.sparkContext)
+      (jobs.get(), res.metrics.size)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val (inMemory, steps) = jobsOf(PageRank.run(edges))
+      val (checkpointed, ckptSteps) = jobsOf(PageRank.run(edges, checkpointDir = Some(tmpDir("jobs"))))
+      assert(steps == 5 && ckptSteps == 5)
+      assert(checkpointed - inMemory <= steps,
+        s"checkpointed run took $checkpointed jobs, in-memory $inMemory, over $steps supersteps")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      edges.unpersist()
+    }
+  }
+
+  test("a resume refuses a checkpoint written for another input") {
+    val dir = tmpDir("fingerprint")
+    val edges = GraphGen.rmat(spark, 7, 4, seed = 2).cache()
+    val other = GraphGen.chain(spark, 40).cache()
+    try {
+      val uninterrupted = toMap[Double](PageRank.run(edges, checkpointDir = Some(dir)).ranks)
+      val written = manifest(dir, 5).path("fingerprint").asText()
+      assert(written.startsWith("pagerank "), s"manifest fingerprint '$written'")
+      // lose supersteps 3-5, as a crash would
+      (3 to 5).foreach(ss => Files.delete(Paths.get(s"$dir/superstep=$ss/manifest.json")))
+      val err = intercept[IllegalStateException] {
+        PageRank.run(other, checkpointDir = Some(dir), resume = true)
+      }
+      // the error names both fingerprints: the checkpoint's and this run's
+      // (the 40-vertex chain stores 78 directed edges)
+      assert(err.getMessage.contains(s"'$written'"), err.getMessage)
+      assert(err.getMessage.contains("V=40 E=78'"), err.getMessage)
+      val resumed = toMap[Double](PageRank.run(edges, checkpointDir = Some(dir), resume = true).ranks)
+      assert(resumed.keySet == uninterrupted.keySet)
+      uninterrupted.foreach { case (v, r) =>
+        assert(math.abs(resumed(v) - r) <= 1e-12 * math.abs(r), s"vid $v: ${resumed(v)} vs $r")
+      }
+    } finally { edges.unpersist(); other.unpersist() }
   }
 
   test("metrics expose GTEPS per superstep") {
