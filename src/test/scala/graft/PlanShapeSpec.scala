@@ -124,6 +124,29 @@ class PlanShapeSpec extends SparkSpec {
       () => lastCuts(2 * Eigen.run(edges, rounds = 3).metrics.size),
       Shape(exactly(2), also = Seq(outboxCombine, hashJoinsOnly)),
       Shape(exactly(1), bnlj = 1)),
+    Case("Katz.run: the PageRank plan, 2 exchanges per superstep",
+      () => lastCuts(Katz.run(edges, rounds = 3).metrics.size),
+      Shape(exactly(2), also = Seq(outboxCombine, hashJoinsOnly))),
+    Case("PageRank.personalized: 2 exchanges per superstep, messages combined map-side",
+      () => lastCuts(PageRank.personalized(edges, Seq(0L, 1L, 2L), rounds = 3).metrics.size),
+      Shape(exactly(2), also = Seq(outboxCombine, hashJoinsOnly))),
+    // per superstep: the forward scatter cut, the reverse scatter cut, the norms
+    Case("Hits.run: two scatter-reduces, then a 1-row norm broadcast",
+      () => lastCuts(3 * Hits.run(edges, rounds = 3).metrics.size),
+      Shape(exactly(2), also = Seq(outboxCombine, hashJoinsOnly)),
+      Shape(exactly(2), also = Seq(outboxCombine, hashJoinsOnly)),
+      Shape(exactly(1), bnlj = 1)),
+    Case("Salsa.run: the Hits plan, degree divisions projected",
+      () => lastCuts(3 * Salsa.run(edges, rounds = 3).metrics.size),
+      Shape(exactly(2), also = Seq(outboxCombine, hashJoinsOnly)),
+      Shape(exactly(2), also = Seq(outboxCombine, hashJoinsOnly)),
+      Shape(exactly(1), bnlj = 1)),
+    Case("Independent.mis: 5 exchanges per round, min-key scatter combined map-side",
+      () => lastCuts(Independent.mis(edges).metrics.size),
+      Shape(exactly(5), also = Seq(outboxCombine, hashJoinsOnly))),
+    Case("Anf.run: 2 exchanges per hop, register max combined map-side",
+      () => lastCuts(Anf.run(edges, maxH = 3, relTol = 0.0).metrics.size),
+      Shape(exactly(2), also = Seq(outboxCombine, hashJoinsOnly))),
     Case("FeatureProp.exploded: the PageRank plan per round, widened by dim",
       () => lastCuts { FeatureProp.exploded(edges.filter(col("src") < 500 && col("dst") < 500),
         embeddings, "vec_id", "embedding", alpha = 0.5, rounds = 2); 2 },
