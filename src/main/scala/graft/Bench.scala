@@ -247,7 +247,7 @@ object Bench {
    * host-throttle phase cannot land entirely on one side of the ratio;
    * every run is probe-bracketed for the audit trail, best-of over all
    * runs as everywhere else. */
-  private[graft] def textScalingLeg(s: SparkSession, sfDir: String): (String, String) = {
+  private def textScalingLeg(s: SparkSession, sfDir: String): (String, String) = {
     import org.apache.spark.sql.functions._
     // paths keyed by the SOURCE dir AND its fixture's mtime+size: the 10x
     // corpus of sf0.01 must never be served to an sf0.1 leg, and a
@@ -354,11 +354,6 @@ object Bench {
     s.sparkContext.setLogLevel("WARN")
     s
   }
-
-  /** Session for the TextScalingProbe tool: exactly the headline-bench
-   * session config, so the probe measures under the SAME knobs as the bench
-   * it reproduces. */
-  def probeSession(cores: Int = 32): SparkSession = session(cores)
 
   /** One full 5-round PageRank over a pre-generated edge parquet; returns
    * (gteps, algExecSec). GTEPS = E*5 / alg_exec — Totem's exec_rate over

@@ -1240,10 +1240,10 @@ object SparkEntry {
       // structure (brute top-10 sims ≈ 0.25–0.4 ⇒ per-plane collision
       // p ≈ 0.6), so per-table capture P₁ = Σ_{r≤2} C(4,r)·p^(4-r)(1-p)^r
       // ≈ 0.82 and 3-table capture 1-(1-P₁)³ ≈ 0.994 — measured 10/10 on
-      // every query (RecallProbe 4:2:3; tables=1 measured min 0.6,
-      // tables=2 min 0.9). FLOOR 0.9. At production scale the same knobs
-      // stay sublinear: planes = 20, radius 2, 3 tables probes 633 of 1M
-      // buckets per query. Deterministic: hash-seeded plane families,
+      // every query against brute-force top-10 (tables=1 measured min
+      // 0.6, tables=2 min 0.9). FLOOR 0.9. At production scale the same
+      // knobs stay sublinear: planes = 20, radius 2, 3 tables probes 633 of
+      // 1M buckets per query. Deterministic: hash-seeded plane families,
       // fixed data.
       recallFloor(s, dir, floor = 9, (emb, q) =>
         graft.ann.Ann.lshTopK(emb, q, k = 10, planes = 4, probeRadius = 2,
@@ -1253,12 +1253,12 @@ object SparkEntry {
       // same recall-floor scaffold for the IVF coarse-quantizer path
       // (Ivf.ivfTopK): nlist = 16 lists, nprobe = 4 (25% probed) on the
       // 500-vector verify corpus — measured 0.7–1.0 recall per query
-      // (RecallProbe ivf sweep; nprobe = 6 still bottoms at 0.7), floor
-      // 0.6: IVF has no amplification analog of LSH's tables — recall at
-      // fixed nprobe is a property of how the k-means partition cuts the
-      // weak-structure corpus, and the production recall knob is nprobe
-      // growing with nlist. Deterministic: id-ordered sample, stride
-      // init, struct tie-breaks.
+      // (nprobe sweep against brute-force top-10; nprobe = 6 still
+      // bottoms at 0.7), floor 0.6: IVF has no amplification analog of
+      // LSH's tables — recall at fixed nprobe is a property of how the
+      // k-means partition cuts the weak-structure corpus, and the
+      // production recall knob is nprobe growing with nlist.
+      // Deterministic: id-ordered sample, stride init, struct tie-breaks.
       recallFloor(s, dir, floor = 6, (emb, q) =>
         graft.ann.Ivf.ivfTopK(emb, q, k = 10, nlist = 16, nprobe = 4))),
     "q_embed_top_pairs" -> ((s, dir) => {

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.core.{Adjacency, Graph, Lineage, StepResult, Superstep}
+import graft.functions.RegisterMax
 
 /**
  * Approximate neighborhood function + effective diameter (HyperANF,
@@ -59,17 +60,7 @@ object Anf {
         when(j === i, rho).otherwise(lit(0)).cast("byte")): _*).as("regs"))
   }
 
-  /** One scatter: per vertex, the register-wise max over its in-edges'
-   * sources (each vertex offers its registers to its out-neighbors) as the
-   * bounded-buffer [[graft.functions.RegisterMax]] aggregate — m-byte
-   * messages, map-side partial aggregation (outbox combine). */
-  private def scatterMax(adj: DataFrame, state: DataFrame, m: Int): DataFrame =
-    adj.join(state.hint("shuffle_hash"), adj(Graph.SRC) === state(Graph.VID))
-      .select(explode(col("nbrs")).as(Graph.VID), col("regs"))
-      .groupBy(Graph.VID)
-      .agg(graft.functions.RegisterMax.max(col("regs"), m).as("m_regs"))
-
-  /** Register merge after the scatter join: elementwise
+  /** Register merge after the scatter: elementwise
    * greatest(own, scattered) (the ball contains the previous ball); a
    * vertex with no in-messages keeps its own registers. */
   private def mergedRegs: Column =
@@ -152,7 +143,7 @@ object Anf {
     val outcome = Superstep.run(init,
       Superstep.Config(maxSupersteps = maxH, checkpointDir = checkpointDir,
         resume = resume)) { (state, _) =>
-      val msgs = scatterMax(adj, state, m)
+      val msgs = Adjacency.scatter(adj, state, col("regs"), RegisterMax.max(_, m), "m_regs")
       val next = state.join(msgs.hint("shuffle_hash"), Seq(Graph.VID), "left")
         .select(col(Graph.VID), mergedRegs)
       val cut = Lineage.cut(next)
@@ -257,7 +248,7 @@ object Anf {
     var lastTotal = Double.NaN
     val outcome = Superstep.run(init,
       Superstep.Config(maxSupersteps = maxH)) { (state, h) =>
-      val msgs = scatterMax(adj, state, m)
+      val msgs = Adjacency.scatter(adj, state, col("regs"), RegisterMax.max(_, m), "m_regs")
       val merged = state.join(msgs.hint("shuffle_hash"), Seq(Graph.VID), "left")
         .select(col(Graph.VID), mergedRegs, col("prev"), col("hc"))
         .select(col(Graph.VID), col("regs"), est.as("__est"),

@@ -49,14 +49,11 @@ object BowTie {
     var frontier = visited
     var exhausted = visited.isEmpty
     while (!exhausted) {
-      val nbrs = adj.join(frontier.hint("shuffle_hash"),
-          adj(Graph.SRC) === frontier(Graph.VID))
-        .select(explode(col("nbrs")).as(Graph.VID)).distinct()
       // hint the BUILD (right) side: both inputs are stats-free cut frames,
       // so without it the anti-join falls back to sort-merge and re-sorts
       // O(visited) rows every level
-      val discovered = Lineage.cut(
-        nbrs.join(visited.hint("shuffle_hash"), Seq(Graph.VID), "left_anti"))
+      val discovered = Lineage.cut(Adjacency.expand(adj, frontier)
+        .join(visited.hint("shuffle_hash"), Seq(Graph.VID), "left_anti"))
       exhausted = discovered.isEmpty
       val old = visited
       visited = Lineage.cut(visited.unionByName(discovered))

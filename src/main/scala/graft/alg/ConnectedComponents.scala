@@ -54,20 +54,6 @@ object ConnectedComponents {
    * nothing its neighbors have not already seen), but the plan skips the
    * filter + small-side rebuild that stops paying once the frontier is most
    * of the graph. `denseThreshold >= 1.0` disables the switch. */
-  /** `pointerJump`: per superstep, after the HashMin relax, compress paths
-   * with comp' ← comp_old(relaxed comp) — the Spark-relational form of the
-   * pointer-jumping step in MapReduce-CC (Kiveris et al., "Connected
-   * Components in MapReduce and Beyond"). Labels only decrease (comp(x) ≤ x
-   * and comp(x) is in x's component), so the fixpoint is unchanged — the
-   * min vertex id per component — but min-label distances halve per round:
-   * convergence drops from O(label diameter) toward O(log d) supersteps,
-   * two extra O(V) shuffles per superstep in exchange for skipped O(E)
-   * message rounds. Off by default: on low-diameter web/RMAT graphs HashMin
-   * already converges in ~diameter rounds and the jump removes NONE of them
-   * (measured on rmat s20 @32 cores before the per-partition union-find:
-   * 6 supersteps either way, +5% shuffle bytes with the jump) — enable it
-   * for high-diameter inputs (meshes, chains, road networks) where label
-   * distance, not graph distance, dominates round count. */
   /** `warmStart`: a previous snapshot's (vid, component) assignment — the
    * recrawl path (mirror of `PageRank.warmStart`): labels initialize to the
    * OLD component minimum instead of the vertex's own id. Any valid snapshot
@@ -95,7 +81,6 @@ object ConnectedComponents {
           resume: Boolean = false,
           maxSupersteps: Int = 200,
           denseThreshold: Double = 0.1,
-          pointerJump: Boolean = false,
           warmStart: Option[DataFrame] = None): Result = {
     // cut: the symmetrized edge set feeds the adjacency build AND the degree
     // pass — uncut, each re-ran the union+distinct AND the upstream edge
@@ -145,8 +130,9 @@ object ConnectedComponents {
     }
     val outcome = Superstep.run(init,
       Superstep.Config(maxSupersteps = maxSupersteps, checkpointDir = checkpointDir,
-        resume = resume, fingerprint = s"wcc denseThreshold=$denseThreshold " +
-          s"pointerJump=$pointerJump V=$totalV E=$totalEdges")) { (state, _) =>
+        resume = resume,
+        fingerprint = s"wcc denseThreshold=$denseThreshold V=$totalV E=$totalEdges")) {
+        (state, _) =>
       val (frontEdges, deltaCount) = carried.getOrElse(frontierStats(state))
       val dense = deltaCount > denseThreshold * totalV
       val trv = if (dense) totalEdges else frontEdges
@@ -165,27 +151,12 @@ object ConnectedComponents {
       // shuffle_hash on the O(V) msgs side: SMJ would re-sort two O(V)
       // frames every superstep for no benefit (the output is re-hashed by
       // the next superstep anyway)
-      val relaxed = state.select(col(Graph.VID), col("comp"), col("deg"))
+      val next = state.select(col(Graph.VID), col("comp"), col("deg"))
         .join(msgs.hint("shuffle_hash"), Seq(Graph.VID), "left")
         .select(col(Graph.VID), col("deg"), col("comp").as("old"),
           least(col("comp"), coalesce(col("cand"), col("comp"))).as("m"))
-      val next =
-        if (pointerJump)
-          // NOTE: this join's probe-side key is the relaxed label, which in
-          // late supersteps concentrates on each component's minimum id —
-          // on skewed graphs the jump relies on AQE skew-join splitting
-          // (opt-in, see scaladoc)
-          relaxed.join(
-              state.select(col(Graph.VID).as("__j"), col("comp").as("__jc"))
-                .hint("shuffle_hash"),
-              col("m") === col("__j"), "left")
-            .select(col(Graph.VID),
-              coalesce(col("__jc"), col("m")).as("comp"),
-              (coalesce(col("__jc"), col("m")) < col("old")).as("changed"),
-              col("deg"))
-        else
-          relaxed.select(col(Graph.VID), col("m").as("comp"),
-            (col("m") < col("old")).as("changed"), col("deg"))
+        .select(col(Graph.VID), col("m").as("comp"),
+          (col("m") < col("old")).as("changed"), col("deg"))
       // materialize ONCE (Superstep skips re-materializing a cut frame)
       val cut = graft.core.Lineage.cut(next)
       val post = frontierStats(cut)

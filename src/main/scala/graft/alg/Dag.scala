@@ -70,10 +70,7 @@ object Dag {
       Superstep.Config(maxSupersteps = maxSupersteps)) { (state, _) =>
       val (frontEdges, _) = carried.getOrElse(frontierStats(state))
       val pushFrom = state.filter(col("changed"))
-      val msgs = adj.join(pushFrom.hint("shuffle_hash"),
-          adj(Graph.SRC) === pushFrom(Graph.VID))
-        .select(explode(col("nbrs")).as(Graph.VID), (col("layer") + 1L).as("cand"))
-        .groupBy(Graph.VID).agg(max("cand").as("cand"))
+      val msgs = Adjacency.scatter(adj, pushFrom, col("layer") + 1L, max(_), "cand")
       val next = state.select(col(Graph.VID), col("layer"), col("deg"))
         .join(msgs.hint("shuffle_hash"), Seq(Graph.VID), "left")
         .select(col(Graph.VID),

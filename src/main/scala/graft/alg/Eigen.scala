@@ -2,7 +2,6 @@ package graft.alg
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.core.{Adjacency, Graph, StepResult, Superstep}
 
 /**
@@ -36,12 +35,8 @@ object Eigen {
           rounds: Int = 5,
           checkpointDir: Option[String] = None,
           resume: Boolean = false): Result = {
-    val (e0, ownE) = Graph.ensureCut(edges) // one upstream pass, not three
-    val adj = Adjacency.build(e0).persist(StorageLevel.MEMORY_AND_DISK)
-    adj.count() // partition build is init-time, not alg_exec
-    val verts = Graph.vertices(e0).persist(StorageLevel.MEMORY_AND_DISK)
-    verts.count()
-    val e = e0.count()
+    val g = Adjacency.load(edges)
+    import g.{adj, verts, e}
 
     val init = verts.select(col(Graph.VID), lit(1.0).as("eigen"))
 
@@ -54,9 +49,7 @@ object Eigen {
       Superstep.Config(maxSupersteps = rounds, checkpointDir = checkpointDir,
         resume = resume)) { (state, superstep) =>
       pendingRelease.foreach(graft.core.Lineage.release); pendingRelease = None
-      val msgs = adj.join(state.hint("shuffle_hash"), adj(Graph.SRC) === state(Graph.VID))
-        .select(explode(col("nbrs")).as(Graph.VID), col("eigen"))
-        .groupBy(Graph.VID).agg(sum("eigen").as("m"))
+      val msgs = Adjacency.scatter(adj, state, col("eigen"), sum(_), "m")
       val raw = graft.core.Lineage.cut(verts
         .join(msgs.hint("shuffle_hash"), Seq(Graph.VID), "left")
         .select(col(Graph.VID), coalesce(col("m"), lit(0.0)).as("m")))
@@ -68,8 +61,7 @@ object Eigen {
       StepResult(next, edgesTraversed = e, converged = superstep == rounds)
     }
     pendingRelease.foreach(graft.core.Lineage.release)
-    adj.unpersist(blocking = false); verts.unpersist(blocking = false)
-    if (ownE) graft.core.Lineage.release(e0)
+    g.release()
     Result(outcome.state, outcome.metrics)
   }
 }

@@ -34,14 +34,11 @@ object Hits {
           rounds: Int = 5,
           checkpointDir: Option[String] = None,
           resume: Boolean = false): Result = {
-    val (e0, ownE) = Graph.ensureCut(edges) // one upstream pass, not four
-    val adjF = Adjacency.build(e0).persist(StorageLevel.MEMORY_AND_DISK)
-    val adjR = Adjacency.build(Graph.reverse(e0))
+    val g = Adjacency.load(edges)
+    import g.{adj => adjF, verts, e}
+    val adjR = Adjacency.build(Graph.reverse(g.edges))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    adjF.count(); adjR.count() // partition build is init-time, not alg_exec
-    val verts = Graph.vertices(e0).persist(StorageLevel.MEMORY_AND_DISK)
-    verts.count()
-    val e = e0.count()
+    adjR.count() // partition build is init-time, not alg_exec
 
     val init = verts.select(col(Graph.VID), lit(1.0).as("hub"), lit(1.0).as("auth"))
 
@@ -53,13 +50,8 @@ object Hits {
       Superstep.Config(maxSupersteps = rounds, checkpointDir = checkpointDir,
         resume = resume)) { (state, superstep) =>
       pendingRelease.foreach(graft.core.Lineage.release); pendingRelease = None
-      // auth'(v) = Σ_{u→v} hub(u): state shuffles by vid (O(V)); the
-      // pre-partitioned adjacency side stays put (shuffle_hash keeps the
-      // stats-free loop frame off sort-merge, as in PageRank.run)
-      val authMsgs = adjF.join(state.hint("shuffle_hash"),
-          adjF(Graph.SRC) === state(Graph.VID))
-        .select(explode(col("nbrs")).as(Graph.VID), col("hub"))
-        .groupBy(Graph.VID).agg(sum("hub").as("a_raw"))
+      // auth'(v) = Σ_{u→v} hub(u)
+      val authMsgs = Adjacency.scatter(adjF, state, col("hub"), sum(_), "a_raw")
       // materialize ONCE: `authed` feeds both the reverse scatter and the
       // final join — without the cut the forward scatter subtree would
       // execute twice per superstep (the double-execution
@@ -68,10 +60,7 @@ object Hits {
         .join(authMsgs.hint("shuffle_hash"), Seq(Graph.VID), "left")
         .select(col(Graph.VID), coalesce(col("a_raw"), lit(0.0)).as("a_raw")))
       // hub'(u) = Σ_{u→v} auth'(v): reverse scatter of the fresh auth
-      val hubMsgs = adjR.join(authed.hint("shuffle_hash"),
-          adjR(Graph.SRC) === authed(Graph.VID))
-        .select(explode(col("nbrs")).as(Graph.VID), col("a_raw"))
-        .groupBy(Graph.VID).agg(sum("a_raw").as("h_raw"))
+      val hubMsgs = Adjacency.scatter(adjR, authed, col("a_raw"), sum(_), "h_raw")
       // same single-materialization rule: `raw` feeds the norm aggregate
       // AND the output select
       val raw = graft.core.Lineage.cut(authed
@@ -92,9 +81,8 @@ object Hits {
     }
     pendingRelease.foreach(graft.core.Lineage.release)
 
-    adjF.unpersist(blocking = false); adjR.unpersist(blocking = false)
-    verts.unpersist(blocking = false)
-    if (ownE) graft.core.Lineage.release(e0)
+    adjR.unpersist(blocking = false)
+    g.release()
     Result(outcome.state.select(col(Graph.VID), col("hub"), col("auth")),
       outcome.metrics)
   }

@@ -167,17 +167,12 @@ object Independent {
     val active = state.filter(col("status") === Active)
       .select(col(Graph.VID), col("k"))
     // scatter each active vertex's key to its neighbors; min per receiver
-    val nbrMin = adj.join(active.hint("shuffle_hash"),
-        adj(Graph.SRC) === active(Graph.VID))
-      .select(explode(col("nbrs")).as(Graph.VID), col("k").as("nk"))
-      .groupBy(Graph.VID).agg(min("nk").as("__mn"))
+    val nbrMin = Adjacency.scatter(adj, active, col("k"), min(_), "__mn")
     val sel = active.join(nbrMin.hint("shuffle_hash"), Seq(Graph.VID), "left")
       .filter(col("__mn").isNull || col("k") < col("__mn"))
       .select(col(Graph.VID))
     // the selected set's neighborhood — the kill set for this round
-    val kill = adj.join(sel.hint("shuffle_hash"),
-        adj(Graph.SRC) === sel(Graph.VID))
-      .select(explode(col("nbrs")).as(Graph.VID)).distinct()
+    val kill = Adjacency.expand(adj, sel)
     state
       .join(sel.select(col(Graph.VID), lit(true).as("__sel"))
         .hint("shuffle_hash"), Seq(Graph.VID), "left")

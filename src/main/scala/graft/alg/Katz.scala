@@ -2,7 +2,6 @@ package graft.alg
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.core.{Adjacency, Graph, StepResult, Superstep}
 
 /**
@@ -38,29 +37,21 @@ object Katz {
           alpha: Double = 0.1,
           checkpointDir: Option[String] = None,
           resume: Boolean = false): Result = {
-    val (e0, ownE) = Graph.ensureCut(edges) // one upstream pass, not three
-    val adj = Adjacency.build(e0).persist(StorageLevel.MEMORY_AND_DISK)
-    adj.count() // partition build is init-time, not alg_exec
-    val verts = Graph.vertices(e0).persist(StorageLevel.MEMORY_AND_DISK)
-    verts.count()
-    val e = e0.count()
+    val g = Adjacency.load(edges)
+    import g.{adj, verts, e}
 
     val init = verts.select(col(Graph.VID), lit(0.0).as("katz"))
     val outcome = Superstep.run(init,
       Superstep.Config(maxSupersteps = rounds, checkpointDir = checkpointDir,
         resume = resume)) { (state, superstep) =>
-      val msgs = adj.join(state.hint("shuffle_hash"), adj(Graph.SRC) === state(Graph.VID))
-        .select(explode(col("nbrs")).as(Graph.VID), col("katz"))
-        .groupBy(Graph.VID)
-        .agg(sum(lit(1.0) + col("katz")).as("m"))
+      val msgs = Adjacency.scatter(adj, state, lit(1.0) + col("katz"), sum(_), "m")
       val next = verts
         .join(msgs.hint("shuffle_hash"), Seq(Graph.VID), "left")
         .select(col(Graph.VID),
           (lit(alpha) * coalesce(col("m"), lit(0.0))).as("katz"))
       StepResult(next, edgesTraversed = e, converged = superstep == rounds)
     }
-    adj.unpersist(blocking = false); verts.unpersist(blocking = false)
-    if (ownE) graft.core.Lineage.release(e0)
+    g.release()
     Result(outcome.state, outcome.metrics)
   }
 }

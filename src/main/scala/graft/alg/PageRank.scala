@@ -1,6 +1,6 @@
 package graft.alg
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.core.{Adjacency, Graph, StepResult, Superstep}
@@ -33,60 +33,44 @@ object PageRank {
   final case class Result(ranks: DataFrame, metrics: Seq[graft.core.StepMetrics])
 
   /**
-   * Shared init for the rank family: chunked adjacency, vertex set, and
-   * out-degree frame, each persisted and forced (Totem's `time_init` /
-   * `time_par` split — partition build is init-time, not alg_exec). Composite
-   * metrics that run SEVERAL rank loops over the SAME graph ([[spamMass]]:
-   * global + personalized) build this once instead of paying the O(E)
-   * adjacency build per loop.
+   * Shared init for the rank family: the loaded graph ([[Adjacency.load]])
+   * plus the out-degree frame, persisted and forced (init time, not
+   * alg_exec). Composite metrics that run SEVERAL rank loops over the SAME
+   * graph ([[spamMass]]: global + personalized) load it once instead of
+   * paying the O(E) adjacency build per loop.
    */
-  private[graft] final case class RankCtx(
-      adj: DataFrame, verts: DataFrame, degs: DataFrame, v: Long, e: Long,
-      edges0: DataFrame, ownEdges: Boolean) {
-    def release(): Unit = {
-      adj.unpersist(blocking = false)
-      degs.unpersist(blocking = false)
-      verts.unpersist(blocking = false)
-      if (ownEdges) graft.core.Lineage.release(edges0)
-    }
-  }
-
-  private[graft] def buildCtx(edges: DataFrame,
-                              chunkSize: Int = Adjacency.DefaultChunk): RankCtx = {
-    // materialize the (usually derived) edge table once: the four init
-    // consumers below each re-executed the upstream plan otherwise
-    val (e0, ownE) = Graph.ensureCut(edges)
-    val adj = Adjacency.build(e0, chunkSize)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    adj.count() // force: partition build is init-time (Totem's time_par), not alg_exec
-    val verts = Graph.vertices(e0).persist(StorageLevel.MEMORY_AND_DISK)
-    val v = verts.count()
-    val e = e0.count()
+  private def withGraph[T](edges: DataFrame, chunkSize: Int = Adjacency.DefaultChunk)
+                          (body: (Adjacency.Loaded, DataFrame) => T): T = {
+    val g = Adjacency.load(edges, chunkSize)
     // deg per vertex for the pre-division (0 for pure sinks)
-    val degs = verts.join(Graph.outDegrees(e0), Seq(Graph.VID), "left")
+    val degs = g.verts.join(Graph.outDegrees(g.edges), Seq(Graph.VID), "left")
       .select(col(Graph.VID), coalesce(col("deg"), lit(0L)).as("deg"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    degs.count() // init-time, not alg_exec
-    RankCtx(adj, verts, degs, v, e, e0, ownE)
+    try {
+      degs.count() // init-time, not alg_exec
+      body(g, degs)
+    } finally { degs.unpersist(blocking = false); g.release() }
   }
+
+  /** The stored rank a vertex scatters next round: value/deg, except a
+   * sink keeps its value (the reference's division by 0 is never read). */
+  private def preDivided(value: Column): Column =
+    when(col("deg") > 0, value / col("deg")).otherwise(value)
 
   def run(edges: DataFrame,
           rounds: Int = 5,
           damping: Double = 0.85,
           checkpointDir: Option[String] = None,
           resume: Boolean = false,
-          chunkSize: Int = Adjacency.DefaultChunk): Result = {
-    val ctx = buildCtx(edges, chunkSize)
-    try runWithCtx(ctx, rounds, damping, checkpointDir, resume)
-    finally ctx.release()
-  }
+          chunkSize: Int = Adjacency.DefaultChunk): Result =
+    withGraph(edges, chunkSize)(runWith(_, _, rounds, damping, checkpointDir, resume))
 
-  private[graft] def runWithCtx(ctx: RankCtx,
-                                rounds: Int = 5,
-                                damping: Double = 0.85,
-                                checkpointDir: Option[String] = None,
-                                resume: Boolean = false): Result = {
-    import ctx.{adj, verts, degs, v, e}
+  private def runWith(g: Adjacency.Loaded, degs: DataFrame,
+                      rounds: Int = 5,
+                      damping: Double = 0.85,
+                      checkpointDir: Option[String] = None,
+                      resume: Boolean = false): Result = {
+    import g.{adj, verts, v, e}
     val base = (1.0 - damping) / v
 
     val init = verts.select(col(Graph.VID), lit(1.0 / v).as("stored"))
@@ -96,13 +80,7 @@ object PageRank {
         resume = resume,
         fingerprint = s"pagerank rounds=$rounds damping=$damping V=$v E=$e")) {
         (state, superstep) =>
-      // shuffle-hash hint: the state side (O(V)) is hash-built per partition
-      // against the pre-partitioned adjacency — no driver-side broadcast
-      // build (unscalable at 10^12 vertices) and no per-superstep sort
-      val msgs = adj.join(state.hint("shuffle_hash"), adj(Graph.SRC) === state(Graph.VID))
-        .select(explode(col("nbrs")).as(Graph.VID), col("stored"))
-        .groupBy(Graph.VID)
-        .agg(sum("stored").as("mbox"))
+      val msgs = Adjacency.scatter(adj, state, col("stored"), sum(_), "mbox")
       // shuffle_hash on the O(V) mailbox side: without it the planner picks
       // sort-merge and re-sorts two O(V) frames every superstep
       val updated = degs
@@ -113,9 +91,7 @@ object PageRank {
         if (superstep == rounds)
           updated.select(col(Graph.VID), col("value").as("stored"))
         else
-          updated.select(col(Graph.VID),
-            when(col("deg") > 0, col("value") / col("deg"))
-              .otherwise(col("value")).as("stored"))
+          updated.select(col(Graph.VID), preDivided(col("value")).as("stored"))
       StepResult(next, edgesTraversed = e, converged = superstep == rounds)
     }
 
@@ -199,51 +175,41 @@ object PageRank {
                    rounds: Int = 5,
                    damping: Double = 0.85,
                    checkpointDir: Option[String] = None,
-                   resume: Boolean = false): Result = {
-    val ctx = buildCtx(edges)
-    try personalizedWithCtx(ctx, seeds, rounds, damping, checkpointDir, resume)
-    finally ctx.release()
-  }
+                   resume: Boolean = false): Result =
+    withGraph(edges)(personalizedWith(_, _, seeds, rounds, damping, checkpointDir, resume))
 
-  private[graft] def personalizedWithCtx(ctx: RankCtx,
-                                         seeds: Seq[Long],
-                                         rounds: Int = 5,
-                                         damping: Double = 0.85,
-                                         checkpointDir: Option[String] = None,
-                                         resume: Boolean = false): Result = {
+  private def personalizedWith(g: Adjacency.Loaded, degs0: DataFrame,
+                               seeds: Seq[Long],
+                               rounds: Int = 5,
+                               damping: Double = 0.85,
+                               checkpointDir: Option[String] = None,
+                               resume: Boolean = false): Result = {
     require(seeds.nonEmpty, "personalized PageRank needs a non-empty seed set")
-    import ctx.{adj, e}
+    import g.{adj, e}
     val seedMass = 1.0 / seeds.size
 
     // (vid, deg, seed): seed = restart mass — a narrow projection over the
     // shared persisted degree frame (the seed column re-evaluates per read,
     // an O(1) literal-set probe on cached rows)
-    val degs = ctx.degs
+    val degs = degs0
       .select(col(Graph.VID), col("deg"),
         when(col(Graph.VID).isInCollection(seeds), lit(seedMass))
           .otherwise(lit(0.0)).as("seed"))
 
     // stored = value/deg; init value = seed(v)
     val init = degs.select(col(Graph.VID),
-      when(col("deg") > 0, col("seed") / col("deg"))
-        .otherwise(col("seed")).as("stored"),
-      col("seed").as("value"))
+      preDivided(col("seed")).as("stored"), col("seed").as("value"))
 
     val outcome = Superstep.run(init,
       Superstep.Config(maxSupersteps = rounds, checkpointDir = checkpointDir,
         resume = resume)) { (state, superstep) =>
-      val msgs = adj.join(state.hint("shuffle_hash"), adj(Graph.SRC) === state(Graph.VID))
-        .select(explode(col("nbrs")).as(Graph.VID), col("stored"))
-        .groupBy(Graph.VID).agg(sum("stored").as("mbox"))
+      val msgs = Adjacency.scatter(adj, state, col("stored"), sum(_), "mbox")
       val next = degs
         .join(msgs.hint("shuffle_hash"), Seq(Graph.VID), "left")
         .select(col(Graph.VID), col("deg"),
           (lit(1.0 - damping) * col("seed")
             + lit(damping) * coalesce(col("mbox"), lit(0.0))).as("value"))
-        .select(col(Graph.VID),
-          when(col("deg") > 0, col("value") / col("deg"))
-            .otherwise(col("value")).as("stored"),
-          col("value"))
+        .select(col(Graph.VID), preDivided(col("value")).as("stored"), col("value"))
       StepResult(next, edgesTraversed = e, converged = superstep == rounds)
     }
     Result(outcome.state.select(col(Graph.VID), col("value").as("rank")), outcome.metrics)
@@ -260,7 +226,7 @@ object PageRank {
    * its rank from untrusted (likely spam-farm) links.
    *
    * One shared init: the chunked adjacency, vertex set, and degree frame are
-   * built and persisted ONCE ([[buildCtx]]) and both superstep loops read
+   * built and persisted ONCE ([[withGraph]]) and both superstep loops read
    * them — running the two loops separately pays the O(E) adjacency build
    * and three init passes twice for identical frames. The arithmetic is
    * bit-identical to composing [[run]] and [[personalized]] by hand (same
@@ -276,23 +242,21 @@ object PageRank {
                seeds: Seq[Long],
                rounds: Int = 5,
                damping: Double = 0.85,
-               roundTo: Int = 6): DataFrame = {
-    val ctx = buildCtx(edges)
-    try {
-      val pr = runWithCtx(ctx, rounds, damping).ranks
+               roundTo: Int = 6): DataFrame =
+    withGraph(edges) { (g, degs) =>
+      val pr = runWith(g, degs, rounds, damping).ranks
         .select(col(Graph.VID), round(col("rank"), roundTo).as("pr"))
-      val tr = personalizedWithCtx(ctx, seeds, rounds, damping).ranks
+      val tr = personalizedWith(g, degs, seeds, rounds, damping).ranks
         .select(col(Graph.VID), round(col("rank"), roundTo).as("tr"))
       // the two rank frames are already materialized (each loop's last
-      // superstep is lineage-cut), so the join runs before ctx release
+      // superstep is lineage-cut), so the join runs before the graph release
       val out = pr.join(tr, Seq(Graph.VID))
         .select(col(Graph.VID), col("pr"), col("tr"),
           round((col("pr") - col("tr")) / col("pr"), roundTo).as("spam_mass"))
       // the loops' final cut states stay pinned only until GC (weak-keyed
       // backing map + ContextCleaner), same as every Result-returning run
       graft.core.Lineage.cut(out)
-    } finally ctx.release()
-  }
+    }
 
   /**
    * Convergence mode (north rule's "iterations-to-convergence"): same update
@@ -313,10 +277,9 @@ object PageRank {
                         damping: Double = 0.85,
                         maxIter: Int = 100,
                         checkpointDir: Option[String] = None,
-                        warmStart: Option[DataFrame] = None): Result = {
-    val ctx = buildCtx(edges)
-    try {
-      import ctx.{adj, verts, degs, v, e}
+                        warmStart: Option[DataFrame] = None): Result =
+    withGraph(edges) { (g, degs) =>
+      import g.{adj, verts, v, e}
       val base = (1.0 - damping) / v
 
       // state carries both the stored (pre-divided) rank and the display value
@@ -331,25 +294,17 @@ object PageRank {
               Seq(Graph.VID), "left")
             .select(col(Graph.VID), col("deg"),
               coalesce(col("value"), lit(1.0 / v)).as("value"))
-            .select(col(Graph.VID),
-              when(col("deg") > 0, col("value") / col("deg"))
-                .otherwise(col("value")).as("stored"),
-              col("value"))
+            .select(col(Graph.VID), preDivided(col("value")).as("stored"), col("value"))
       }
       val outcome = Superstep.run(init,
         Superstep.Config(maxSupersteps = maxIter,
           checkpointDir = checkpointDir)) { (state, _) =>
-        val msgs = adj.join(state.hint("shuffle_hash"), adj(Graph.SRC) === state(Graph.VID))
-          .select(explode(col("nbrs")).as(Graph.VID), col("stored"))
-          .groupBy(Graph.VID).agg(sum("stored").as("mbox"))
+        val msgs = Adjacency.scatter(adj, state, col("stored"), sum(_), "mbox")
         val next = degs
           .join(msgs.hint("shuffle_hash"), Seq(Graph.VID), "left")
           .select(col(Graph.VID), col("deg"),
             (lit(base) + lit(damping) * coalesce(col("mbox"), lit(0.0))).as("value"))
-          .select(col(Graph.VID),
-            when(col("deg") > 0, col("value") / col("deg"))
-              .otherwise(col("value")).as("stored"),
-            col("value"))
+          .select(col(Graph.VID), preDivided(col("value")).as("stored"), col("value"))
         // materialize once; the L∞ probe joins two CACHED O(V) frames instead
         // of re-executing the O(E) message plan
         val cut = graft.core.Lineage.cut(next)
@@ -359,6 +314,5 @@ object PageRank {
         StepResult(cut, edgesTraversed = e, converged = delta < tol)
       }
       Result(outcome.state.select(col(Graph.VID), col("value").as("rank")), outcome.metrics)
-    } finally ctx.release()
-  }
+    }
 }

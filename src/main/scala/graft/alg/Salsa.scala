@@ -39,14 +39,11 @@ object Salsa {
           rounds: Int = 5,
           checkpointDir: Option[String] = None,
           resume: Boolean = false): Result = {
-    val (e0, ownE) = Graph.ensureCut(edges) // one upstream pass, not four
-    val adjF = Adjacency.build(e0).persist(StorageLevel.MEMORY_AND_DISK)
-    val adjR = Adjacency.build(Graph.reverse(e0))
+    val g = Adjacency.load(edges)
+    import g.{adj => adjF, verts, e}
+    val adjR = Adjacency.build(Graph.reverse(g.edges))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    adjF.count(); adjR.count()
-    val verts = Graph.vertices(e0).persist(StorageLevel.MEMORY_AND_DISK)
-    verts.count()
-    val e = e0.count()
+    adjR.count() // partition build is init-time, not alg_exec
 
     val init = verts.select(col(Graph.VID), lit(1.0).as("hub"), lit(1.0).as("auth"))
 
@@ -58,20 +55,12 @@ object Salsa {
         resume = resume)) { (state, superstep) =>
       pendingRelease.foreach(graft.core.Lineage.release); pendingRelease = None
       // a_raw(v) = Σ_{u→v} hub(u)/outdeg(u): adjF.deg is outdeg(u)
-      val authMsgs = adjF.join(state.hint("shuffle_hash"),
-          adjF(Graph.SRC) === state(Graph.VID))
-        .select(explode(col("nbrs")).as(Graph.VID),
-          (col("hub") / col("deg")).as("m"))
-        .groupBy(Graph.VID).agg(sum("m").as("a_raw"))
+      val authMsgs = Adjacency.scatter(adjF, state, col("hub") / col("deg"), sum(_), "a_raw")
       val authed = graft.core.Lineage.cut(verts
         .join(authMsgs.hint("shuffle_hash"), Seq(Graph.VID), "left")
         .select(col(Graph.VID), coalesce(col("a_raw"), lit(0.0)).as("a_raw")))
       // h_raw(u) = Σ_{u→v} a_raw(v)/indeg(v): adjR.deg is indeg(v)
-      val hubMsgs = adjR.join(authed.hint("shuffle_hash"),
-          adjR(Graph.SRC) === authed(Graph.VID))
-        .select(explode(col("nbrs")).as(Graph.VID),
-          (col("a_raw") / col("deg")).as("m"))
-        .groupBy(Graph.VID).agg(sum("m").as("h_raw"))
+      val hubMsgs = Adjacency.scatter(adjR, authed, col("a_raw") / col("deg"), sum(_), "h_raw")
       val raw = graft.core.Lineage.cut(authed
         .join(hubMsgs.hint("shuffle_hash"), Seq(Graph.VID), "left")
         .select(col(Graph.VID), coalesce(col("h_raw"), lit(0.0)).as("h_raw"),
@@ -88,9 +77,8 @@ object Salsa {
     }
     pendingRelease.foreach(graft.core.Lineage.release)
 
-    adjF.unpersist(blocking = false); adjR.unpersist(blocking = false)
-    verts.unpersist(blocking = false)
-    if (ownE) graft.core.Lineage.release(e0)
+    adjR.unpersist(blocking = false)
+    g.release()
     Result(outcome.state.select(col(Graph.VID), col("hub"), col("auth")),
       outcome.metrics)
   }

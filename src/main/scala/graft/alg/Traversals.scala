@@ -77,8 +77,7 @@ object Traversals {
             .select(col(Graph.VID)).distinct()
             .select(col(Graph.VID), lit(level).cast("int").as("cost"), lit(true).as("frontier"))
         } else {
-          adj.join(frontier.hint("shuffle_hash"), adj(Graph.SRC) === frontier(Graph.VID))
-            .select(explode(col("nbrs")).as(Graph.VID)).distinct()
+          Adjacency.expand(adj, frontier)
             .join(state.select(col(Graph.VID)), Seq(Graph.VID), "left_anti")
             .select(col(Graph.VID), lit(level).cast("int").as("cost"), lit(true).as("frontier"))
         }
@@ -105,9 +104,7 @@ object Traversals {
     val outcome = Superstep.run(init,
       Superstep.Config(maxSupersteps = 10000, checkpointDir = checkpointDir)) { (state, _) =>
       val frontier = state.filter(col("frontier"))
-      val cand = adj.join(frontier.hint("shuffle_hash"), adj(Graph.SRC) === frontier(Graph.VID))
-        .select(explode(col("nbrs")).as(Graph.VID), adj(Graph.SRC).as("parent"))
-        .groupBy(Graph.VID).agg(min("parent").as("parent"))
+      val cand = Adjacency.scatter(adj, frontier, adj(Graph.SRC), min(_), "parent")
       val discovered = cand
         .join(state.select(col(Graph.VID)), Seq(Graph.VID), "left_anti")
         .withColumn("frontier", lit(true))
@@ -166,9 +163,7 @@ object Traversals {
     var found = false
     var exhausted = false
     while (!found && !exhausted) {
-      val nbrs = adj.join(frontier.hint("shuffle_hash"), adj(Graph.SRC) === frontier(Graph.VID))
-        .select(explode(col("nbrs")).as(Graph.VID)).distinct()
-      val discovered = nbrs.join(visited, Seq(Graph.VID), "left_anti")
+      val discovered = Adjacency.expand(adj, frontier).join(visited, Seq(Graph.VID), "left_anti")
         .transform(graft.core.Lineage.cut)
       found = !discovered.filter(col(Graph.VID) === t).isEmpty
       exhausted = discovered.isEmpty

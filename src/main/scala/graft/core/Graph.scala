@@ -438,9 +438,54 @@ object Graph {
  * vwarp/degree-sectioned kernels, `totem_page_rank_incoming_hybrid.cu:316-341`):
  * no single task ever owns a super-hub's full neighbor list, so the
  * state⋈adjacency join and the subsequent explode stay balanced at any skew.
+ *
+ * [[scatter]] and [[expand]] are the one message path of the superstep
+ * loops — Totem's engine-owned communication phase (`engine_execute`,
+ * `totem_engine.cu:214-234`), with the algorithm supplying only the message
+ * and its combiner. The layout they encode: the adjacency stays put
+ * (hash-partitioned by src, persisted), only the O(V) sender side shuffles,
+ * hash-built per partition (`shuffle_hash`, no driver broadcast, no sort).
  */
 object Adjacency {
   final val DefaultChunk = 4096
+
+  /** One message pass: every row of `from` (keyed by `vid`) sends `msg`
+   * to each out-neighbour; `agg(msg)` combines per receiver, map-side first
+   * (Totem's outbox combiner, `totem_engine_internal.cuh:70-183`). `msg`
+   * may read `from`'s columns and the adjacency's `src`/`deg`. Returns
+   * (vid, `as`) for every vertex that received a message. */
+  def scatter(adj: DataFrame, from: DataFrame, msg: Column,
+              agg: Column => Column, as: String): DataFrame =
+    adj.join(from.hint("shuffle_hash"), adj(Graph.SRC) === from(Graph.VID))
+      .select(explode(col("nbrs")).as(Graph.VID), msg.as("__msg"))
+      .groupBy(Graph.VID).agg(agg(col("__msg")).as(as))
+
+  /** The distinct out-neighbours (vid) of the `frontier` rows' vids. */
+  def expand(adj: DataFrame, frontier: DataFrame): DataFrame =
+    adj.join(frontier.hint("shuffle_hash"), adj(Graph.SRC) === frontier(Graph.VID))
+      .select(explode(col("nbrs")).as(Graph.VID)).distinct()
+
+  /** A graph loaded for the superstep loops: the edge table cut once
+   * ([[Graph.ensureCut]]), its adjacency and vertex set persisted and
+   * forced (graph load is init time — Totem's `time_par` — not alg_exec),
+   * V and E counted. */
+  final case class Loaded(adj: DataFrame, verts: DataFrame, v: Long, e: Long,
+                          edges: DataFrame, ownEdges: Boolean) {
+    def release(): Unit = {
+      adj.unpersist(blocking = false)
+      verts.unpersist(blocking = false)
+      if (ownEdges) Lineage.release(edges)
+    }
+  }
+
+  def load(edges: DataFrame, chunkSize: Int = DefaultChunk): Loaded = {
+    val (e0, own) = Graph.ensureCut(edges)
+    val adj = build(e0, chunkSize).persist(StorageLevel.MEMORY_AND_DISK)
+    adj.count()
+    val verts = Graph.vertices(e0).persist(StorageLevel.MEMORY_AND_DISK)
+    val v = verts.count()
+    Loaded(adj, verts, v, e0.count(), e0, own)
+  }
 
   def build(edges: DataFrame, chunkSize: Int = DefaultChunk): DataFrame = {
     // Salt = which chunk a neighbor lands in; deterministic via per-src

@@ -113,12 +113,6 @@ class ComponentsSpec extends SparkSpec {
     edges.unpersist()
   }
 
-  test("pointer jumping reaches the same min-id labels") {
-    val edges = GraphGen.disconnectedChains(spark, 4, 10)
-    val comp = toMap[Long](ConnectedComponents.run(edges, pointerJump = true).components)
-    assert(comp == (0 until 40).map(v => v.toLong -> (v / 10) * 10L).toMap)
-  }
-
   test("directed edges are symmetrized (weak connectivity)") {
     val edges = Seq((0L, 1L), (2L, 1L)).toDF("src", "dst")
     val comp = toMap[Long](ConnectedComponents.run(edges).components)

@@ -113,6 +113,24 @@ class GraphOpsSpec extends SparkSpec {
     assert(leafRows.length == 1 && leafRows(0).getSeq[Long](2) == Seq(0L))
   }
 
+  test("scatter and expand over a split hub match the per-edge answers") {
+    // hub 0 has out-degree 7 (two parallel edges), so chunkSize 2 splits it
+    // into 4 rows; leaf 4 sends to the hub twice, and 10 sends nothing
+    val e = Seq((0L, 1L), (0L, 3L), (0L, 4L), (0L, 6L), (0L, 10L), (0L, 1L), (0L, 6L),
+      (3L, 0L), (4L, 0L), (4L, 0L), (10L, 11L)).toDF("src", "dst")
+    val adj = Adjacency.build(e, chunkSize = 2)
+    assert(adj.filter(col("src") === 0L).count() == 4)
+    val from = Graph.vertices(e).filter(col("vid") =!= 10L)
+      .select(col("vid"), (col("vid") * 10 + 1).as("x"))
+    val perEdge = e.join(from, col("src") === col("vid"))
+      .groupBy(col("dst").as("vid")).agg(sum("x").as("s"))
+    assert(toMap[Long](Adjacency.scatter(adj, from, col("x"), sum(_), "s")) ==
+      toMap[Long](perEdge))
+    val frontier = Seq(0L, 4L).toDF("vid")
+    assert(Adjacency.expand(adj, frontier).as[Long].collect().sorted.toSeq ==
+      Seq(0L, 1L, 3L, 4L, 6L, 10L))
+  }
+
   test("edge-balanced buckets: each bucket carries ~equal edge mass") {
     val e = GraphGen.rmat(spark, 9, 8, seed = 2)
     val buckets = Partitioning.edgeBalancedBuckets(e, 8)

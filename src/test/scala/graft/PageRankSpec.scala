@@ -111,7 +111,7 @@ class PageRankSpec extends SparkSpec {
   }
 
   test("spamMass equals the hand-composed run + personalized ratio exactly") {
-    // guards the shared-RankCtx path: one adjacency/degree init feeding both
+    // guards the shared-graph path: one adjacency/degree init feeding both
     // loops must be bit-identical to two independent inits
     val edges = GraphGen.rmat(spark, 8, 8, seed = 7).cache()
     val seeds = edges.select(col("src").as("vid")).union(edges.select(col("dst")))
