@@ -169,39 +169,24 @@ object Anf {
   }
 
   /**
-   * Exact neighborhood function (h, n_reach) for h = 0..maxH by level-
-   * synchronous expansion of ALL balls at once — O(Σ_v |B(v,h)|) state, the
-   * small-scale oracle path for [[run]] (same role the brute-force scan
-   * plays for the ANN paths). If every ball saturates before maxH the
-   * remaining rows are padded with the fixpoint count, mirroring the
-   * estimator's flat tail.
+   * Exact neighborhood function (h, n_reach) for h = 0..maxH: one
+   * [[Adjacency.reach]] sweep with every vertex as its own root, bounded
+   * by maxH — O(Σ_v |B(v,h)|) state, the small-scale oracle path for
+   * [[run]] (same role the brute-force scan plays for the ANN paths).
+   * n_reach(h) counts the (root, vid) pairs at dist ≤ h, so once every
+   * ball saturates the tail stays flat, mirroring the estimator's.
    */
   def exactNeighborhood(edges: DataFrame, maxH: Int): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     val adj = Adjacency.build(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    adj.count()
-    var reach = Graph.vertices(edges)
-      .select(col(Graph.VID).as("root"), col(Graph.VID))
-      .transform(Lineage.cut)
-    var frontier = reach
-    val counts = ListBuffer[(Int, Long)]((0, reach.count()))
-    var h = 0
-    while (h < maxH && !frontier.isEmpty) {
-      h += 1
-      val next = adj.join(frontier, adj(Graph.SRC) === frontier(Graph.VID))
-        .select(col("root"), explode(col("nbrs")).as(Graph.VID))
-        .distinct()
-        .join(reach.select(col("root").as("__r"), col(Graph.VID).as("__v")),
-          col("root") === col("__r") && col(Graph.VID) === col("__v"), "left_anti")
-        .transform(Lineage.cut)
-      reach = reach.unionByName(next).transform(Lineage.cut)
-      frontier = next
-      counts += ((h, counts.last._2 + next.count()))
-    }
-    while (counts.size <= maxH) counts += ((counts.size, counts.last._2))
+    val balls = Adjacency.reach(adj,
+      Graph.vertices(edges).select(col(Graph.VID).as("root"), col(Graph.VID)), maxLevels = maxH)
+    val perDist = balls.groupBy("dist").count().collect().map(r => r.getInt(0) -> r.getLong(1))
+    Lineage.release(balls)
     adj.unpersist(blocking = false)
-    counts.toSeq.toDF("h", "n_reach")
+    (0 to maxH).map(h => (h, perDist.collect { case (d, n) if d <= h => n }.sum))
+      .toDF("h", "n_reach")
   }
 
   /**

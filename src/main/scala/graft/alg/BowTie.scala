@@ -21,9 +21,9 @@ import graft.core.{Adjacency, Graph, Lineage}
  *
  * A link-graph extension beyond the reference (Totem ships WCC only,
  * `totem_cc_hybrid.cu`); it composes two primitives the engine already
- * owns: [[StronglyConnected]] for the CORE and batched frontier
- * reachability for the four sweeps. Each sweep is an O(diameter) loop of
- * vid-keyed shuffle-hash joins over a persisted chunked adjacency — the
+ * owns: [[StronglyConnected]] for the CORE and [[Adjacency.reach]] for the
+ * four sweeps. Each sweep is O(diameter) supersteps of vid-keyed
+ * shuffle-hash joins over a persisted chunked adjacency — the
  * forward and the reversed adjacency are each built and cached ONCE and
  * shared by their two sweeps; no transitive closure is ever materialized
  * (the DuckDB oracle does build the closure — that is exactly the
@@ -40,30 +40,6 @@ object BowTie {
 
   val Core = "CORE"; val In = "IN"; val Out = "OUT"
   val Tube = "TUBE"; val Tendril = "TENDRIL"; val Disc = "DISC"
-
-  /** All vertices reachable from `seeds` (seeds included) along `adj` —
-   * level-synchronous frontier expansion, visited set lineage-cut per
-   * level. `adj` must be a persisted [[Adjacency.build]] result. */
-  private def reachable(adj: DataFrame, seeds: DataFrame): DataFrame = {
-    var visited = Lineage.cut(seeds.select(col(Graph.VID)).distinct())
-    var frontier = visited
-    var exhausted = visited.isEmpty
-    while (!exhausted) {
-      // hint the BUILD (right) side: both inputs are stats-free cut frames,
-      // so without it the anti-join falls back to sort-merge and re-sorts
-      // O(visited) rows every level
-      val discovered = Lineage.cut(Adjacency.expand(adj, frontier)
-        .join(visited.hint("shuffle_hash"), Seq(Graph.VID), "left_anti"))
-      exhausted = discovered.isEmpty
-      val old = visited
-      visited = Lineage.cut(visited.unionByName(discovered))
-      Lineage.release(old) // old == frontier only at level 1; reassigned next
-      if (frontier ne old) Lineage.release(frontier)
-      frontier = discovered
-    }
-    if (frontier ne visited) Lineage.release(frontier)
-    visited
-  }
 
   /** (vid, region) for every vertex of the edge table. */
   def decompose(edges: DataFrame): DataFrame = {
@@ -86,8 +62,8 @@ object BowTie {
     val bwd = Adjacency.build(Graph.reverse(e)).persist(StorageLevel.MEMORY_AND_DISK)
 
     def sweep(adj: DataFrame, seeds: DataFrame, trim: DataFrame => DataFrame) = {
-      val r = reachable(adj, seeds)
-      val out = Lineage.cut(trim(r))
+      val r = Adjacency.reach(adj, seeds)
+      val out = Lineage.cut(trim(r.select(col(Graph.VID))))
       Lineage.release(r)
       out
     }

@@ -3,7 +3,7 @@ package graft.alg
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.core.{Adjacency, Graph}
+import graft.core.{Adjacency, Graph, Lineage}
 import scala.collection.mutable.ArrayBuffer
 
 /**
@@ -52,28 +52,27 @@ object Centrality {
   private def forward(adj: DataFrame, sources: Seq[Long]): ArrayBuffer[DataFrame] = {
     val spark = adj.sparkSession
     import spark.implicits._
-    val levels = ArrayBuffer[DataFrame]()
-    var frontier = sources.map(s => (s, s, 1L)).toDF("root", Graph.VID, "sigma")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var visited = frontier.select("root", Graph.VID)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    levels += frontier
+    val levels = ArrayBuffer(Lineage.cut(
+      sources.map(s => (s, s, 1L)).toDF("root", Graph.VID, "sigma")))
+    var visited = levels.head.select("root", Graph.VID)
     var done = false
     while (!done) {
+      val frontier = levels.last
       val next = adj.join(frontier, adj(Graph.SRC) === frontier(Graph.VID))
         .select(col("root"), explode(col("nbrs")).as(Graph.VID), col("sigma"))
         .join(visited.select(col("root").as("__r"), col(Graph.VID).as("__v")),
           col("root") === col("__r") && col(Graph.VID) === col("__v"), "left_anti")
         .groupBy("root", Graph.VID).agg(sum("sigma").as("sigma"))
-        .transform(graft.core.Lineage.cut)
-      if (next.isEmpty) done = true
+        .transform(Lineage.cut)
+      if (next.isEmpty) { Lineage.release(next); done = true }
       else {
         levels += next
-        visited = visited.unionByName(next.select("root", Graph.VID))
-          .transform(graft.core.Lineage.cut)
-        frontier = next
+        val old = visited
+        visited = Lineage.cut(visited.unionByName(next.select("root", Graph.VID)))
+        Lineage.release(old)
       }
     }
+    Lineage.release(visited)
     levels
   }
 
@@ -85,18 +84,19 @@ object Centrality {
    * (path COUNTS through v rather than fractions).
    * A root whose BFS depth m is below the batch maximum sees no delta rows
    * at level m+1, so its deepest vertices coalesce to δ = 0 — the same
-   * base case the per-source loop gave its own last level. Returns
+   * base case the per-source loop gave its own last level. Returns the cut
    * (vid, score) summed over all roots, excluding each root's own row.
    */
   private def backward(adj: DataFrame, levels: ArrayBuffer[DataFrame],
                        stress: Boolean, mult: Map[Long, Int]): DataFrame = {
-    var delta: DataFrame = null // (root, vid, sigma, delta) of the level below
-    var acc: DataFrame = null   // accumulated per-vertex scores
+    val deltas = ArrayBuffer[DataFrame]() // (root, vid, sigma, delta) per level
+    var acc: DataFrame = null             // accumulated per-vertex scores
     for (l <- levels.indices.reverse) {
       val cur = levels(l)
       val withDelta =
-        if (delta == null) cur.withColumn("delta", lit(0.0))
+        if (deltas.isEmpty) cur.withColumn("delta", lit(0.0))
         else {
+          val delta = deltas.last
           // v in level l, w in level l+1 along an edge (v,w), per root
           val contrib = adj.join(cur, adj(Graph.SRC) === cur(Graph.VID))
             .select(col("root"), cur(Graph.VID).as("v"), col("sigma").as("sv"),
@@ -116,11 +116,13 @@ object Centrality {
         .filter(col(Graph.VID) =!= col("root"))
         .select(col("root"), col(Graph.VID), col("delta").as("score")), mult)
       acc = if (acc == null) scored else acc.unionByName(scored)
-      delta = withDelta
-        .select(col("root"), col(Graph.VID), col("sigma"), col("delta"))
-        .transform(graft.core.Lineage.cut)
+      deltas += Lineage.cut(withDelta
+        .select(col("root"), col(Graph.VID), col("sigma"), col("delta")))
     }
-    acc.groupBy(Graph.VID).agg(sum("score").as("score"))
+    // acc reads every delta lazily: release them only once it is cut
+    val out = Lineage.cut(acc.groupBy(Graph.VID).agg(sum("score").as("score")))
+    deltas.foreach(Lineage.release)
+    out
   }
 
   private def perSource(edges: DataFrame, sources: Seq[Long], stress: Boolean): DataFrame = {
@@ -129,13 +131,13 @@ object Centrality {
     val adj = Adjacency.build(e0).persist(StorageLevel.MEMORY_AND_DISK)
     val levels = forward(adj, roots)
     val all = backward(adj, levels, stress, mult)
-    levels.foreach(_.unpersist(blocking = false))
     val verts = Graph.vertices(e0)
-    val res = graft.core.Lineage.cut(
+    val res = Lineage.cut(
       verts.join(all, Seq(Graph.VID), "left")
         .select(col(Graph.VID), coalesce(col("score"), lit(0.0)).as("score")))
+    (levels :+ all).foreach(Lineage.release)
     adj.unpersist(blocking = false)
-    if (ownE) graft.core.Lineage.release(e0)
+    if (ownE) Lineage.release(e0)
     res
   }
 
@@ -151,20 +153,19 @@ object Centrality {
   /** Batched per-edge backward accumulation: emits every BFS-DAG edge's
    * dependency c(v→w) = σ(v)/σ(w) · (1 + δ(w)) per root — the same contrib
    * rows [[backward]] aggregates per vertex, kept keyed by the edge and
-   * summed over roots at the end. The (root, v, w) frame is persisted per
-   * level because it feeds BOTH the edge emission and the vertex-delta
-   * rollup the next level up. */
+   * summed over roots at the end into the returned cut. The (root, v, w)
+   * frame is persisted per level because it feeds BOTH the edge emission
+   * and the vertex-delta rollup the next level up. */
   private def backwardEdges(adj: DataFrame, levels: ArrayBuffer[DataFrame],
                             mult: Map[Long, Int]): DataFrame = {
-    var delta: DataFrame = null
+    val deltas = ArrayBuffer[DataFrame]()
     var acc: DataFrame = null
     val cache = ArrayBuffer[DataFrame]()
     for (l <- levels.indices.reverse) {
       val cur = levels(l)
-      if (delta == null) {
-        delta = cur.withColumn("delta", lit(0.0))
-          .transform(graft.core.Lineage.cut)
-      } else {
+      if (deltas.isEmpty) deltas += Lineage.cut(cur.withColumn("delta", lit(0.0)))
+      else {
+        val delta = deltas.last
         val pair = adj.join(cur, adj(Graph.SRC) === cur(Graph.VID))
           .select(col("root"), cur(Graph.VID).as("v"), col("sigma").as("sv"),
             explode(col("nbrs")).as("w"))
@@ -183,17 +184,17 @@ object Centrality {
           col("v").as(Graph.SRC), col("w").as(Graph.DST),
           col("c").as("score")), mult)
         acc = if (acc == null) scored else acc.unionByName(scored)
-        delta = withDelta.transform(graft.core.Lineage.cut)
+        deltas += Lineage.cut(withDelta)
       }
     }
     val out =
       if (acc == null)
-        delta.sparkSession.emptyDataFrame
+        adj.sparkSession.emptyDataFrame
           .select(lit(0L).as(Graph.SRC), lit(0L).as(Graph.DST),
             lit(0.0).as("score")).limit(0)
-      else acc.groupBy(Graph.SRC, Graph.DST).agg(sum("score").as("score"))
-          .transform(graft.core.Lineage.cut)
+      else Lineage.cut(acc.groupBy(Graph.SRC, Graph.DST).agg(sum("score").as("score")))
     cache.foreach(_.unpersist(blocking = false))
+    deltas.foreach(Lineage.release)
     out
   }
 
@@ -213,16 +214,15 @@ object Centrality {
     val levels = forward(adj, roots)
     // backwardEdges already aggregated to one row per (src, dst)
     val all = backwardEdges(adj, levels, mult)
-      .withColumnRenamed("score", "edge_betweenness")
-    levels.foreach(_.unpersist(blocking = false))
     val base = e0.select(col(Graph.SRC), col(Graph.DST))
       .filter(col(Graph.SRC) =!= col(Graph.DST)).distinct()
-    val res = graft.core.Lineage.cut(
+    val res = Lineage.cut(
       base.join(all, Seq(Graph.SRC, Graph.DST), "left")
         .select(col(Graph.SRC), col(Graph.DST),
-          coalesce(col("edge_betweenness"), lit(0.0)).as("edge_betweenness")))
+          coalesce(col("score"), lit(0.0)).as("edge_betweenness")))
+    (levels :+ all).foreach(Lineage.release)
     adj.unpersist(blocking = false)
-    if (ownE) graft.core.Lineage.release(e0)
+    if (ownE) Lineage.release(e0)
     res
   }
 
@@ -232,36 +232,19 @@ object Centrality {
       .select(col(Graph.VID), round(col("score")).cast("long").as("stress"))
 
   /**
-   * Multi-source BFS (batched): one iterative job carrying (root, vid, dist)
-   * — sources share every superstep's join, the scalable form of looped
-   * single-source BFS. With sources = all vertices this is unweighted APSP
-   * (the reference's `totem_apsp.cu:193-308`, practical only on small V —
-   * output is O(V²); for sampled landmark sets it scales).
+   * Multi-source BFS (batched): one [[Adjacency.reach]] sweep carrying
+   * (root, vid, dist) — sources share every superstep's join, the scalable
+   * form of looped single-source BFS. With sources = all vertices this is
+   * unweighted APSP (the reference's `totem_apsp.cu:193-308`, practical
+   * only on small V — output is O(V²); for sampled landmark sets it scales).
    */
   def multiSourceBfs(edges: DataFrame, sources: Seq[Long]): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     val adj = Adjacency.build(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    // a root SET: a duplicated source would seed duplicate (s, s, 0) state
-    // rows that survive to the output (levels dedupe via distinct)
-    var state = sources.distinct.map(s => (s, s, 0)).toDF("root", Graph.VID, "dist")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var frontier = state
-    var level = 0
-    while (!frontier.isEmpty) {
-      level += 1
-      val next = adj.join(frontier, adj(Graph.SRC) === frontier(Graph.VID))
-        .select(col("root"), explode(col("nbrs")).as(Graph.VID))
-        .distinct()
-        .join(state.select(col("root").as("__r"), col(Graph.VID).as("__v")),
-          col("root") === col("__r") && col(Graph.VID) === col("__v"), "left_anti")
-        .select(col("root"), col(Graph.VID), lit(level).as("dist"))
-        .transform(graft.core.Lineage.cut)
-      state = state.unionByName(next)
-        .transform(graft.core.Lineage.cut)
-      frontier = next
-    }
+    // a root SET: a duplicated source would seed duplicate state rows
+    val out = Adjacency.reach(adj, sources.distinct.map(s => (s, s)).toDF("root", Graph.VID))
     adj.unpersist(blocking = false)
-    state
+    out
   }
 }

@@ -44,6 +44,7 @@ object MaxFlow {
       val live = residual.filter(col("r") > 0).persist(StorageLevel.MEMORY_AND_DISK)
       var parents = Seq((s, -1L)).toDF("vid", "parent")
       var frontier = parents.select("vid")
+      var bfsCuts = List.empty[DataFrame] // released once the path is walked
       var reachedT = false
       var exhausted = false
       while (!reachedT && !exhausted) {
@@ -51,9 +52,11 @@ object MaxFlow {
           .groupBy(col("v").as("vid")).agg(min("u").as("parent"))
           .join(parents.select(col("vid").as("__seen")), col("vid") === col("__seen"), "left_anti")
         val nextC = Lineage.cut(next)
+        bfsCuts ::= nextC
         if (nextC.isEmpty) exhausted = true
         else {
           parents = Lineage.cut(parents.unionByName(nextC))
+          bfsCuts ::= parents
           frontier = nextC.select("vid")
           reachedT = !nextC.filter(col("vid") === t).isEmpty
         }
@@ -72,11 +75,14 @@ object MaxFlow {
         val deltas = hops.map { case (u, v) => (u, v, -bottleneck) } ++
           hops.map { case (u, v) => (v, u, bottleneck) }
         val deltaDf = deltas.toDF("u", "v", "d")
+        val old = residual
         residual = Lineage.cut(
           residual.join(broadcast(deltaDf), Seq("u", "v"), "left")
             .select(col("u"), col("v"), (col("r") + coalesce(col("d"), lit(0.0))).as("r")))
+        Lineage.release(old)
       }
       live.unpersist(blocking = false)
+      bfsCuts.foreach(Lineage.release)
     }
     val flows = cap.join(residual, Seq("u", "v"))
       .select(col("u").as(Graph.SRC), col("v").as(Graph.DST),

@@ -24,9 +24,10 @@ import scala.collection.mutable.ArrayBuffer
  *  3. BACKWARD sweep: for each color root r (c(r) = r), SCC(r) =
  *     {v : c(v) = r and v reaches r} — a backward BFS from all roots at
  *     once, restricted to same-color vertices (batched like
- *     [[Centrality.multiSourceBfs]]: every root shares each superstep's
- *     join). Completed SCCs are labeled min-member-vid (matching the WCC
- *     label convention) and removed; repeat on the remainder.
+ *     [[graft.core.Adjacency.reach]]: every root shares each superstep's
+ *     join; the color filter keeps it a loop of its own). Completed SCCs
+ *     are labeled min-member-vid (matching the WCC label convention) and
+ *     removed; repeat on the remainder.
  *
  * Every inner iteration and the per-round subgraph are lineage-cut; the
  * remaining-subgraph edge set shrinks monotonically. All joins are O(rem)

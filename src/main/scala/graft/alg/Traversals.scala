@@ -152,25 +152,15 @@ object Traversals {
   }
 
   /** st-connectivity: BFS from src with early exit once dst is reached
-   * (`totem_alg.h:281-285`). */
+   * (`totem_alg.h:281-285`) — one [[Adjacency.reach]] sweep stopped by t. */
   def stConnected(edges: DataFrame, s: Long, t: Long): Boolean = {
     if (s == t) return true
     val spark = edges.sparkSession
     import spark.implicits._
     val adj = Adjacency.build(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    var visited = Seq(s).toDF(Graph.VID).persist(StorageLevel.MEMORY_AND_DISK)
-    var frontier = visited
-    var found = false
-    var exhausted = false
-    while (!found && !exhausted) {
-      val discovered = Adjacency.expand(adj, frontier).join(visited, Seq(Graph.VID), "left_anti")
-        .transform(graft.core.Lineage.cut)
-      found = !discovered.filter(col(Graph.VID) === t).isEmpty
-      exhausted = discovered.isEmpty
-      visited = visited.unionByName(discovered)
-        .transform(graft.core.Lineage.cut)
-      frontier = discovered
-    }
+    val reached = Adjacency.reach(adj, Seq(s).toDF(Graph.VID), stop = Some(t))
+    val found = !reached.filter(col(Graph.VID) === t).isEmpty
+    graft.core.Lineage.release(reached)
     adj.unpersist(blocking = false)
     found
   }
@@ -181,22 +171,14 @@ object Traversals {
    * multi-source BFS ([[Centrality.multiSourceBfs]]) — every superstep's
    * join is shared across roots instead of O(roots × diameter) sequential
    * driver round-trips. Returns (vid, closeness) keyed by root. */
-  def closeness(edges: DataFrame, sources: Seq[Long]): DataFrame = {
-    val levels = Centrality.multiSourceBfs(edges, sources)
-    levels.groupBy(col("root").as(Graph.VID))
+  def closeness(edges: DataFrame, sources: Seq[Long]): DataFrame =
+    Centrality.multiSourceBfs(edges, sources)
+      .groupBy(col("root").as(Graph.VID))
       .agg(sum("dist").as("sd"), count(lit(1)).as("n"))
       .select(col(Graph.VID),
         when(col("sd") > 0, (col("n") - 1).cast("double") / col("sd"))
           .otherwise(lit(0.0)).as("closeness"))
-  }
 
-  /** Harmonic centrality for a set of source vertices, exact per source:
-   * harmonic(s) = Σ_{v ≠ s reachable} 1/dist(s,v) — the
-   * disconnected-robust variant of closeness (Boldi & Vigna, "Axioms for
-   * Centrality": unreachable vertices contribute 0 instead of poisoning
-   * the mean). Shares the one batched [[Centrality.multiSourceBfs]] job
-   * across all roots like [[closeness]]. Returns (vid, harmonic) keyed by
-   * root; roots reaching nothing get 0.0. */
   /** Sampled eccentricity: per root, the max BFS distance reached —
    * max over a landmark sample lower-bounds the diameter (the standard
    * scalable diameter estimate). One batched [[Centrality.multiSourceBfs]]
@@ -233,15 +215,15 @@ object Traversals {
         col("cost").cast("long").as("diameter_lb"))
   }
 
-  def harmonic(edges: DataFrame, sources: Seq[Long]): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val levels = Centrality.multiSourceBfs(edges, sources)
-    val scores = levels.filter(col("dist") > 0)
-      .groupBy(col("root"))
-      .agg(sum(lit(1.0) / col("dist")).as("h"))
-    sources.toDF("root").join(scores, Seq("root"), "left")
-      .select(col("root").as(Graph.VID),
-        coalesce(col("h"), lit(0.0)).as("harmonic"))
-  }
+  /** Harmonic centrality for a set of source vertices, exact per source:
+   * harmonic(s) = Σ_{v ≠ s reachable} 1/dist(s,v) — the
+   * disconnected-robust variant of closeness (Boldi & Vigna, "Axioms for
+   * Centrality": unreachable vertices contribute 0 instead of poisoning
+   * the mean). Shares the one batched [[Centrality.multiSourceBfs]] job
+   * across all roots like [[closeness]]. Returns (vid, harmonic) keyed by
+   * root; a root reaching nothing keeps only its dist-0 row and gets 0.0. */
+  def harmonic(edges: DataFrame, sources: Seq[Long]): DataFrame =
+    Centrality.multiSourceBfs(edges, sources)
+      .groupBy(col("root").as(Graph.VID))
+      .agg(sum(when(col("dist") > 0, lit(1.0) / col("dist")).otherwise(0.0)).as("harmonic"))
 }

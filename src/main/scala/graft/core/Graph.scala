@@ -442,7 +442,8 @@ object Graph {
  * [[scatter]] and [[expand]] are the one message path of the superstep
  * loops — Totem's engine-owned communication phase (`engine_execute`,
  * `totem_engine.cu:214-234`), with the algorithm supplying only the message
- * and its combiner. The layout they encode: the adjacency stays put
+ * and its combiner; [[reach]] is the one plain reachability sweep built on
+ * [[expand]]. The layout they encode: the adjacency stays put
  * (hash-partitioned by src, persisted), only the O(V) sender side shuffles,
  * hash-built per partition (`shuffle_hash`, no driver broadcast, no sort).
  */
@@ -460,10 +461,36 @@ object Adjacency {
       .select(explode(col("nbrs")).as(Graph.VID), msg.as("__msg"))
       .groupBy(Graph.VID).agg(agg(col("__msg")).as(as))
 
-  /** The distinct out-neighbours (vid) of the `frontier` rows' vids. */
-  def expand(adj: DataFrame, frontier: DataFrame): DataFrame =
+  /** The distinct (keys…, vid) out-neighbours of the `frontier` rows' vids,
+   * each carrying its sender's `keys` columns. */
+  def expand(adj: DataFrame, frontier: DataFrame, keys: String*): DataFrame =
     adj.join(frontier.hint("shuffle_hash"), adj(Graph.SRC) === frontier(Graph.VID))
-      .select(explode(col("nbrs")).as(Graph.VID)).distinct()
+      .select(keys.map(frontier(_)) :+ explode(col("nbrs")).as(Graph.VID): _*).distinct()
+
+  /** Level-synchronous reachability along `adj`, one [[Superstep]] step per
+   * BFS level (Totem's engine loop over the BFS step,
+   * `totem_engine.cu:214-234`). `seeds` holds distinct (keys…, vid) rows;
+   * every column but `vid` is a key the sweep carries, so one run serves
+   * many roots. Returns the cut (keys…, vid, dist), dist 0 at the seeds —
+   * the only RDD the call leaves pinned. Stops after a level that is empty
+   * or holds `stop`, or after `maxLevels` levels. */
+  def reach(adj: DataFrame, seeds: DataFrame, maxLevels: Int = Int.MaxValue,
+            stop: Option[Long] = None): DataFrame = {
+    val keys = seeds.columns.toSeq.filterNot(_ == Graph.VID)
+    val ids = keys :+ Graph.VID
+    val init = seeds.select(ids.map(col) :+ lit(0).as("dist"): _*)
+    Superstep.run(init, Superstep.Config(maxSupersteps = maxLevels)) { (state, level) =>
+      // hint the BUILD (right) side: unhinted, the anti-join against the
+      // stats-free cut state falls back to sort-merge every level
+      val found = expand(adj, state.filter(col("dist") === level - 1), keys: _*)
+        .join(state.select(ids.map(col): _*).hint("shuffle_hash"), ids, "left_anti")
+      val cut = Lineage.cut(state.unionByName(found.withColumn("dist", lit(level))))
+      // one job: null when the new level is empty, true when it holds `stop`
+      val probe = cut.filter(col("dist") === level)
+        .agg(max(stop.fold(lit(false))(col(Graph.VID) === _))).head()
+      StepResult(cut, 0L, converged = probe.isNullAt(0) || probe.getBoolean(0))
+    }.state
+  }
 
   /** A graph loaded for the superstep loops: the edge table cut once
    * ([[Graph.ensureCut]]), its adjacency and vertex set persisted and

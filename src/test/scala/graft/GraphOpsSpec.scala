@@ -129,6 +129,10 @@ class GraphOpsSpec extends SparkSpec {
     val frontier = Seq(0L, 4L).toDF("vid")
     assert(Adjacency.expand(adj, frontier).as[Long].collect().sorted.toSeq ==
       Seq(0L, 1L, 3L, 4L, 6L, 10L))
+    // keyed by root: each root gets its own distinct out-neighbours
+    val keyed = Seq((1L, 0L), (2L, 0L), (2L, 4L)).toDF("root", "vid")
+    assert(Adjacency.expand(adj, keyed, "root").as[(Long, Long)].collect().sorted.toSeq ==
+      Seq(1L, 3L, 4L, 6L, 10L).map(1L -> _) ++ Seq(0L, 1L, 3L, 4L, 6L, 10L).map(2L -> _))
   }
 
   test("edge-balanced buckets: each bucket carries ~equal edge mass") {

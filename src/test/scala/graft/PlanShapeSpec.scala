@@ -114,6 +114,16 @@ class PlanShapeSpec extends SparkSpec {
     Case("Traversals.bfs: 3 exchanges per level, frontier hash-joined",
       () => lastCuts(Traversals.bfs(edges, 0L).metrics.size - 1),
       Shape(exactly(3), also = Seq(no[SortMergeJoinExec]))),
+    // Adjacency.reach: the first cut is the seed table, every later one a
+    // level (frontier, distinct, anti-join against the hash-built state).
+    // Unhinted, the anti-join plans as a sort-merge join that AQE turns
+    // into a broadcast on this small graph, so only hashJoinsOnly sees it.
+    Case("Centrality.multiSourceBfs: 3 exchanges per reach level, shuffled hash joins",
+      () => cuts(Centrality.multiSourceBfs(edges, Seq(0L, 1L, 2L))).drop(1),
+      Shape(exactly(3), also = Seq(hashJoinsOnly))),
+    Case("Traversals.stConnected: 3 exchanges per reach level, shuffled hash joins",
+      () => cuts(Traversals.stConnected(edges, 0L, 1023L)).drop(1),
+      Shape(exactly(3), also = Seq(hashJoinsOnly))),
     Case("Dag.layers: <= 3 exchanges per superstep, shuffled hash joins",
       () => lastCuts(Dag.layers(edges.filter(col("src") * 4 < col("dst"))).metrics.size),
       Shape(atMost(3), also = Seq(hashJoinsOnly))),
